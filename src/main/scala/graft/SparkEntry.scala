@@ -4013,7 +4013,7 @@ object SparkEntry {
         |  FROM read_parquet('__OUT__/_input_turns/*.parquet'))
         |SELECT conv_id, CAST(COUNT(*) AS BIGINT) AS n_turns,
         |  CAST(SUM(CASE WHEN regexp_matches(status, '^E[0-9]{3}$') THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
-        |  CAST(COUNT(DISTINCT CASE WHEN tool_invoked <> 'none' THEN tool_invoked END) AS INT) AS n_tools_distinct,
+        |  CAST(COUNT(DISTINCT CASE WHEN tool_invoked NOT IN ('none', '') THEN tool_invoked END) AS INT) AS n_tools_distinct,
         |  strftime(MIN(ts), '%Y-%m-%d %H:%M:%S') AS first_ts,
         |  strftime(MAX(ts), '%Y-%m-%d %H:%M:%S') AS last_ts,
         |  CAST(SUM(latency_ms) AS BIGINT) AS sum_latency_ms

@@ -41,6 +41,12 @@ object Aggregate {
   def sinkCounts(routed: DataFrame): DataFrame =
     routed.groupBy(col(Route.SinkCol)).agg(count(lit(1)).as("n_turns"))
 
+  /** The tool a turn counts toward `n_tools_distinct`: null for "none" and
+    * for a grok miss (""), as in [[toolMask]], whose vocabulary holds neither.
+    */
+  private def countedTool(toolInvoked: Column): Column =
+    when(!toolInvoked.isin("none", ""), toolInvoked)
+
   /** Per-conversation rollup, salted two-phase. Output:
     * (conv_id, n_turns, n_errors, n_tools_distinct, first_ts, last_ts,
     *  sum_latency_ms)
@@ -55,7 +61,7 @@ object Aggregate {
         min(col("ts")).as("p_first"),
         max(col("ts")).as("p_last"),
         sum(col("latency_ms")).as("p_lat"),
-        collect_set(when(col("tool_invoked") =!= "none", col("tool_invoked"))).as("p_tools"))
+        collect_set(countedTool(col("tool_invoked"))).as("p_tools"))
     partial
       .groupBy(col("conv_id"))
       .agg(
@@ -137,7 +143,7 @@ object Aggregate {
     parsed.groupBy(col("conv_id")).agg(
       count(lit(1)).as("n_turns"),
       sum(when(col("err_code").isNotNull, 1L).otherwise(0L)).as("n_errors"),
-      count_distinct(when(col("tool_invoked") =!= "none", col("tool_invoked"))).cast("int").as("n_tools_distinct"),
+      count_distinct(countedTool(col("tool_invoked"))).cast("int").as("n_tools_distinct"),
       min(col("ts")).as("first_ts"),
       max(col("ts")).as("last_ts"),
       sum(col("latency_ms")).as("sum_latency_ms"))

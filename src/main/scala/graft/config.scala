@@ -226,11 +226,8 @@ object ServiceConfig {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.persist()
         try svc.pipelines.foreach { case (name, cfg) =>
-          PipelineConfig.transform(spark, cached, cfg)
-            .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-            .write.mode("overwrite")
-            .partitionBy(Route.SinkCol, "tool_invoked", "role")
-            .parquet(s"$outDir/$name/routed/batch_id=$batchId")
+          Route.writePartitioned(PipelineConfig.transform(spark, cached, cfg),
+            s"$outDir/$name/routed/batch_id=$batchId")
         } finally { cached.unpersist(); () }
       }
       .start()

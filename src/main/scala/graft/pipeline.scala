@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** End-to-end batch pipeline: parse → enrich → route → aggregate
   * (SURVEY.md §3.2 Spark analog). parse/enrich/route are narrow
@@ -26,6 +25,7 @@ object Pipeline {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(NioLocalFileSystem.SessionConf)
       .getOrCreate()
 
   /** Pure transform portion (no writes) — shared by batch and streaming. */
@@ -77,13 +77,8 @@ object Pipeline {
           .getOrElse(Aggregate.DefaultSalt)))
       counts.write.mode("overwrite").parquet(s"$outDir/sink_counts")
       rollup.write.mode("overwrite").parquet(s"$outDir/conv_rollup")
-      Obs.writeLineage(routed, batchId, "route", outDir)
+      val n = Obs.writeLineage(routed, batchId, "route", outDir)
       obs.foreach { m =>
-        // total routed rows from the (tiny) just-written counts table —
-        // never a second full scan of routed (coalesce: sum over an empty
-        // counts table is null)
-        val n = spark.read.parquet(s"$outDir/sink_counts")
-          .agg(coalesce(sum("n_turns"), lit(0L))).head().getLong(0)
         m.sent("route").add(n)
         m.accepted("parse").add(n)
       }

@@ -56,11 +56,7 @@ object StreamingPipeline {
         val cached = batch.persist()
         try {
           // idempotent: deterministic dir per (sink, batchId), overwrite
-          cached
-            .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-            .write.mode("overwrite")
-            .partitionBy(Route.SinkCol, "tool_invoked", "role")
-            .parquet(s"$outDir/routed/batch_id=$batchId")
+          Route.writePartitioned(cached, s"$outDir/routed/batch_id=$batchId")
           Aggregate.sinkCounts(cached)
             .withColumn("batch_id", lit(batchId))
             .coalesce(1)
@@ -95,12 +91,7 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch
-          .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-          .write.mode("overwrite")
-          .partitionBy(Route.SinkCol, "tool_invoked", "role")
-          .parquet(s"$outDir/routed/batch_id=$batchId")
-        ()
+        Route.writePartitioned(batch, s"$outDir/routed/batch_id=$batchId")
       }
       .start()
   }

@@ -38,6 +38,23 @@ class PipelineSpec extends SparkTestBase {
     assert(obs.snapshot("parse/accepted") === nIn)
   }
 
+  test("a grok miss is not a tool: default and config runBatch agree") {
+    import spark.implicits._
+    val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    val turns = Seq(
+      ("c1", 0, "assistant", "tool=search status=OK latency=5ms", "search", ts),
+      ("c1", 1, "assistant", "no tool token here", "", ts))
+      .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
+    val cfg = PipelineConfig.fromJson(PipelineConfig.defaultJson)
+    Seq("default" -> None, "config" -> Some(cfg)).foreach { case (name, config) =>
+      val res = Pipeline.runBatch(spark, turns, tmpDir(s"pipe-miss-$name"),
+        config = config)
+      val r = res.convRollup.head()
+      assert(r.getAs[Long]("n_turns") === 2L, name)
+      assert(r.getAs[Int]("n_tools_distinct") === 1, name)
+    }
+  }
+
   test("enrich is a broadcast join and parse pushes the scan down") {
     val outDir = tmpDir("pipe-plan")
     val turns = TranscriptGen.turnsDs(spark, 50).toDF()

@@ -13,6 +13,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.sql.adaptive.enabled", "true")
     .config("spark.sql.session.timeZone", "UTC")
     .config("spark.ui.enabled", "false")
+    .config(NioLocalFileSystem.SessionConf)
     .getOrCreate()
 
   def tmpDir(prefix: String): String =
