@@ -1,9 +1,12 @@
 package graft
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: headline queries on SPARK_GRAFT_SF_DIR + the
-  * end-to-end transcript pipeline. Prints exactly ONE JSON line.
+  * end-to-end transcript pipeline. Prints exactly ONE JSON line. A row
+  * that throws is reported under `errors` and left out of `total`.
   */
 object Bench {
 
@@ -38,6 +41,29 @@ object Bench {
     // round-5: exact-substring span removal (clean-text reassembly is
     // the cost center) and PSL registrable-domain resolution
     "q_dup_span_removal", "q_url_domain_psl")
+
+  /** The rows part of the JSON line: `"value"` is the total of the rows
+    * that ran, `"queries"` their seconds, `"errors"` the rows that threw,
+    * each with its exception. A failed row has no time, so it adds nothing
+    * to the total.
+    */
+  private[graft] def rowsJson(rows: Seq[(String, Try[Double])]): String = {
+    val timed = rows.collect { case (k, Success(v)) => k -> v }
+    val qs = timed.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
+      .mkString("{", ",", "}")
+    val errors = rows.collect { case (k, Failure(e)) => s""""$k":${jsonString(e.toString)}""" }
+      .mkString("{", ",", "}")
+    f""""value":${timed.map(_._2).sum}%.3f,"queries":$qs,"errors":$errors"""
+  }
+
+  /** `s` as a JSON string literal. */
+  private def jsonString(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
 
   def time[A](f: => A): Double = {
     val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
@@ -178,17 +204,15 @@ object Bench {
 
     // best-of-2 per query: the sandbox VM has multi-minute hypervisor-steal
     // windows that inflate single runs up to 4×
-    val results = headline.flatMap { name =>
+    val results: Seq[(String, Try[Double])] = headline.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        name -> (try math.min(time(fn(spark, sfDir).count()),
-                              time(fn(spark, sfDir).count()))
-                 catch { case _: Throwable => -1.0 })
+        name -> Try(math.min(time(fn(spark, sfDir).count()),
+                             time(fn(spark, sfDir).count())))
       }
     } ++ headlineForced.flatMap { name =>
       SparkEntry.queries.get(name).map { fn =>
-        name -> (try math.min(time(forceAll(fn(spark, sfDir))),
-                              time(forceAll(fn(spark, sfDir))))
-                 catch { case _: Throwable => -1.0 })
+        name -> Try(math.min(time(forceAll(fn(spark, sfDir))),
+                             time(forceAll(fn(spark, sfDir)))))
       }
     }
 
@@ -219,8 +243,8 @@ object Bench {
     // production shape: same pipeline over a conv-bucketed table scan
     // (zero data shuffle — the 100 TB layout; corpus written once,
     // untimed). Guarded: a failure here (e.g. no /dev/shm) must not sink
-    // the whole bench artifact — the row reports -1 instead.
-    val (bktSec, bktIo) = try {
+    // the whole bench artifact — the row reports an error instead.
+    val bkt = Try {
       val bktDir = sys.env.getOrElse("SPARK_GRAFT_BENCH_BKT_DIR",
         "/dev/shm/graft-bench-bkt")
       if (!new java.io.File(s"$bktDir/_SUCCESS").exists())
@@ -231,7 +255,7 @@ object Bench {
       pipelineRunFrom(spark, bkt, bktSalt) // warm
       val (s, _, b) = measured(pipelineRunFrom(spark, bkt, bktSalt))
       (s, b)
-    } catch { case _: Throwable => (-1.0, (0L, 0L, 0L)) }
+    }
 
     // corpus-curation end-to-end: dedup → clusters → decontamination →
     // quality → mixture → redaction → shard/split, one survivor filter
@@ -254,20 +278,19 @@ object Bench {
           .agg(bit_xor(col("h"))).head()
       }
     }
-    val curSec = try {
+    val curSec = Try {
       curationRun() // warm
       math.min(curationRun(), curationRun())
-    } catch { case _: Throwable => -1.0 }
+    }
 
     val all = results :+ ("curation_e2e" -> curSec) :+
-      ("pipeline_e2e" -> pipeSec) :+
-      ("pipeline_bucketed" -> bktSec)
-    val qs = all.map { case (k, v) => "\"" + k + f"\":$v%.3f" }
-      .mkString("{", ",", "}")
-    val total = all.map(_._2).sum
+      ("pipeline_e2e" -> Success(pipeSec)) :+
+      ("pipeline_bucketed" -> bkt.map(_._1))
     def ioJson(b: (Long, Long, Long)): String =
       s"""{"input_bytes":${b._1},"shuffle_write_bytes":${b._2},"shuffle_read_bytes":${b._3}}"""
-    println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"sf":"$sfDir","pipeline_turns":$pipeTurns,"pipeline_turns_per_sec":$turnsPerSec%.0f,"io":{"pipeline_e2e":${ioJson(pipeIo)},"pipeline_bucketed":${ioJson(bktIo)}}}""")
+    val ioRows = (("pipeline_e2e" -> pipeIo) +: bkt.toOption.map("pipeline_bucketed" -> _._2).toSeq)
+      .map { case (k, b) => s""""$k":${ioJson(b)}""" }.mkString("{", ",", "}")
+    println(f"""{"metric":"total",${rowsJson(all)},"unit":"sec","sf":"$sfDir","pipeline_turns":$pipeTurns,"pipeline_turns_per_sec":$turnsPerSec%.0f,"io":$ioRows}""")
     spark.stop()
   }
 }

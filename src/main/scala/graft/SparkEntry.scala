@@ -4173,7 +4173,7 @@ object SparkEntry {
         |  FROM read_parquet('__OUT__/_input_turns/*.parquet')),
         |r AS (SELECT conv_id, CAST(COUNT(*) AS BIGINT) AS n_turns,
         |    CAST(SUM(CASE WHEN err_code IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_errors,
-        |    CAST(COUNT(DISTINCT CASE WHEN tool_invoked <> 'none'
+        |    CAST(COUNT(DISTINCT CASE WHEN tool_invoked NOT IN ('none', '')
         |      THEN tool_invoked END) AS INT) AS n_tools_distinct,
         |    CAST(SUM(latency_ms) AS BIGINT) AS sum_latency_ms,
         |    epoch_us(MAX(ts)) - epoch_us(MIN(ts)) AS span_us,

@@ -43,8 +43,9 @@ object Aggregate {
 
   /** The tool a turn counts toward `n_tools_distinct`: null for "none" and
     * for a grok miss (""), as in [[toolMask]], whose vocabulary holds neither.
+    * Shared with [[TailSample.decideBatch]].
     */
-  private def countedTool(toolInvoked: Column): Column =
+  private[graft] def countedTool(toolInvoked: Column): Column =
     when(!toolInvoked.isin("none", ""), toolInvoked)
 
   /** Per-conversation rollup, salted two-phase. Output:

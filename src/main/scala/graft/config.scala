@@ -197,15 +197,16 @@ object ServiceConfig {
     * in streaming form (§2.10 cloningfanoutconnector / §3.1 shared
     * receiver): ONE file-source query drives ALL pipelines. Each
     * micro-batch is persisted once; every pipeline's config-compiled
-    * transform + partitioned sink write runs against the cached batch, so
-    * the source is scanned once per trigger instead of once per pipeline
+    * transform + partitioned sink write runs against the cached batch (the
+    * pipelines' writes concurrently, [[Commit.all]]), so the source is
+    * scanned once per trigger instead of once per pipeline
     * (N source scans → 1 — at 10^12-turn scale the source scan dominates,
     * so per-pipeline rescans multiply the whole job's IO by N).
     *
     * The trade vs [[startStreams]]: one offset log — pipelines advance and
     * recover TOGETHER (the reference's shared-receiver topology), while
     * startStreams gives each pipeline an independent failure domain.
-    * Output layout matches startStreams ($outDir/<name>/routed/batch_id=*),
+    * The routed layout matches startStreams ($outDir/<name>/routed/batch_id=*),
     * and writes stay idempotent per (pipeline, batchId) so checkpoint
     * replay after a crash overwrites instead of duplicating.
     */
@@ -225,10 +226,10 @@ object ServiceConfig {
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.persist()
-        try svc.pipelines.foreach { case (name, cfg) =>
-          Route.writePartitioned(PipelineConfig.transform(spark, cached, cfg),
+        try Commit.all(svc.pipelines.map { case (name, cfg) =>
+          () => Route.writePartitioned(PipelineConfig.transform(spark, cached, cfg),
             s"$outDir/$name/routed/batch_id=$batchId")
-        } finally { cached.unpersist(); () }
+        }: _*) finally { cached.unpersist(); () }
       }
       .start()
   }

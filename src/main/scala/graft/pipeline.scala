@@ -39,7 +39,9 @@ object Pipeline {
 
   /** Full batch run with fanout write + aggregates + lineage.
     * The routed frame is persisted once (cloningfanout analog) because three
-    * consumers read it: the partitioned write and both aggregates.
+    * consumers read it: the partitioned write and both aggregates. The four
+    * writes run concurrently ([[Commit.all]]); both frames are unpersisted
+    * only after every write has ended.
     * `convClustered`: pass true when `turns` comes from a conv-bucketed
     * scan ([[BucketedCorpus.open]]) — selects [[Aggregate.saltFor]]'s
     * shuffle-free salt.
@@ -69,26 +71,41 @@ object Pipeline {
           salt = Aggregate.saltFor(convClustered)).persist())
       else None
     try {
-      Route.writePartitioned(routed, s"$outDir/routed")
       val counts = partials.map(Aggregate.sinkCountsFromPartials)
         .getOrElse(Aggregate.sinkCounts(routed))
       val rollup = partials.map(Aggregate.convRollupFromPartials)
         .getOrElse(Aggregate.convRollup(routed, salt = config.map(_.salt)
           .getOrElse(Aggregate.DefaultSalt)))
-      counts.write.mode("overwrite").parquet(s"$outDir/sink_counts")
-      rollup.write.mode("overwrite").parquet(s"$outDir/conv_rollup")
-      val n = Obs.writeLineage(routed, batchId, "route", outDir)
+      var n = 0L
+      Commit.all(
+        () => Route.writePartitioned(routed, s"$outDir/routed"),
+        () => counts.write.mode("overwrite").parquet(s"$outDir/sink_counts"),
+        () => rollup.write.mode("overwrite").parquet(s"$outDir/conv_rollup"),
+        () => n = Obs.writeLineage(routed, batchId, "route", outDir))
       obs.foreach { m =>
         m.sent("route").add(n)
         m.accepted("parse").add(n)
       }
       PipelineResult(
-        spark.read.parquet(s"$outDir/routed"),
-        spark.read.parquet(s"$outDir/sink_counts"),
-        spark.read.parquet(s"$outDir/conv_rollup"))
+        readWritten(spark, routed, s"$outDir/routed", Route.PartitionCols),
+        readWritten(spark, counts, s"$outDir/sink_counts"),
+        readWritten(spark, rollup, s"$outDir/conv_rollup"))
     } finally {
       partials.foreach(_.unpersist())
       routed.unpersist()
     }
+  }
+
+  /** Open what was just written from `written` with the schema the write
+    * produced (partition columns last, as a partitioned read lays them
+    * out) instead of inferring it from file footers, a Spark job per
+    * directory.
+    */
+  private def readWritten(spark: SparkSession, written: DataFrame, dir: String,
+                          partitionCols: Seq[String] = Nil): DataFrame = {
+    val s = written.schema
+    val schema = org.apache.spark.sql.types.StructType(
+      s.filterNot(f => partitionCols.contains(f.name)) ++ partitionCols.map(s(_)))
+    spark.read.schema(schema).parquet(dir)
   }
 }

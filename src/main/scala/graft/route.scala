@@ -26,6 +26,9 @@ object Route {
   val SinkCol = "sink"
   val RestSink = "rest"
 
+  /** The partition keys of [[writePartitioned]], in directory order. */
+  val PartitionCols: Seq[String] = Seq(SinkCol, "tool_invoked", "role")
+
   /** Add a `sink` column: first matching spec, else "rest". */
   def assign(df: DataFrame, sinks: Seq[SinkSpec]): DataFrame = {
     require(sinks.nonEmpty, "need at least one sink spec")
@@ -53,7 +56,7 @@ object Route {
     routed
       .sortWithinPartitions(col("conv_id"), col("turn_idx"))
       .write.format(format).mode("overwrite")
-      .partitionBy(SinkCol, "tool_invoked", "role")
+      .partitionBy(PartitionCols: _*)
       .save(outDir)
 
   /** Collector-literal fanout: persist once (≈ cloningfanoutconnector's

@@ -53,21 +53,33 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val cached = batch.persist()
-        try {
-          // idempotent: deterministic dir per (sink, batchId), overwrite
-          Route.writePartitioned(cached, s"$outDir/routed/batch_id=$batchId")
-          Aggregate.sinkCounts(cached)
-            .withColumn("batch_id", lit(batchId))
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(s"$outDir/sink_counts/batch_id=$batchId")
-          val sentRows = Obs.writeLineage(cached, batchId, "route", outDir)
-          obs.foreach(_.sent("route").add(sentRows))
-        } finally { cached.unpersist() }
-        ()
+        commitMicroBatch(batch, batchId, outDir, obs)
       }
       .start()
+  }
+
+  /** One micro-batch's commit, shared by [[start]] and [[startWithConfig]]:
+    * the routed rows, the per-sink counts and the lineage, written
+    * concurrently ([[Commit.all]]) from the batch persisted once.
+    * Idempotent: every output goes to a deterministic `batch_id=<id>`
+    * directory with mode("overwrite"), so a replayed batch rewrites the
+    * same bytes.
+    */
+  private def commitMicroBatch(batch: DataFrame, batchId: Long, outDir: String,
+                               obs: Option[ObsMetrics]): Unit = {
+    val cached = batch.persist()
+    try {
+      var sent = 0L
+      Commit.all(
+        () => Route.writePartitioned(cached, s"$outDir/routed/batch_id=$batchId"),
+        () => Aggregate.sinkCounts(cached)
+          .withColumn("batch_id", lit(batchId))
+          .coalesce(1)
+          .write.mode("overwrite")
+          .parquet(s"$outDir/sink_counts/batch_id=$batchId"),
+        () => sent = Obs.writeLineage(cached, batchId, "route", outDir))
+      obs.foreach(_.sent("route").add(sent))
+    } finally { cached.unpersist() }
   }
 
   /** Config-driven streaming topology — the streaming twin of
@@ -75,12 +87,14 @@ object StreamingPipeline {
     * predicates come from [[PipelineConfig]] JSON (the reference's
     * YAML-driven service startup, SURVEY.md §3.1). All config-compiled
     * stages are narrow/broadcast, so the streaming plan is identical in
-    * shape to the coded one.
+    * shape to the coded one. Commits like [[start]]: routed rows, per-sink
+    * counts and lineage per micro-batch.
     */
   def startWithConfig(spark: SparkSession, inputDir: String, outDir: String,
                       checkpointDir: String, cfg: PipelineConfig,
                       triggerMs: Long = 200L,
-                      maxFilesPerTrigger: Int = 8): StreamingQuery = {
+                      maxFilesPerTrigger: Int = 8,
+                      obs: Option[ObsMetrics] = None): StreamingQuery = {
     val stream = spark.readStream
       .schema(Schemas.turn)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -91,7 +105,7 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Route.writePartitioned(batch, s"$outDir/routed/batch_id=$batchId")
+        commitMicroBatch(batch, batchId, outDir, obs)
       }
       .start()
   }

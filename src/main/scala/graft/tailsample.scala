@@ -144,7 +144,7 @@ object TailSample {
     val baseAggs = Seq(
       count(lit(1)).as("n_turns"),
       count_if(col("err_code").isNotNull).as("n_errors"),
-      count_distinct(when(col("tool_invoked") =!= "none", col("tool_invoked")))
+      count_distinct(Aggregate.countedTool(col("tool_invoked")))
         .cast("int").as("n_tools_distinct"),
       sum(col("latency_ms")).as("sum_latency_ms"),
       min(col("ts")).as("first_ts"),

@@ -56,6 +56,27 @@ class StreamingSpec extends SparkTestBase {
     all.unpersist()
   }
 
+  test("config streaming commits like start: counts, lineage, route/sent") {
+    val inputDir = tmpDir("cfg-commit-in")
+    val outDir = tmpDir("cfg-commit-out")
+    val ckptDir = tmpDir("cfg-commit-ckpt")
+    val turns = TranscriptGen.turnsDs(spark, 100).toDF()
+    turns.repartition(3).write.mode("append").parquet(inputDir)
+    val obs = new ObsMetrics(spark)
+    val q = StreamingPipeline.startWithConfig(spark, inputDir, outDir, ckptDir,
+      PipelineConfig.fromJson(PipelineConfig.defaultJson),
+      maxFilesPerTrigger = 2, obs = Some(obs))
+    q.processAllAvailable()
+    q.stop()
+
+    val n = turns.count()
+    def total(dir: String, c: String): Long =
+      spark.read.parquet(s"$outDir/$dir/batch_id=*").agg(sum(c)).head().getLong(0)
+    assert(total("_lineage/stage=route", "rows") === n)
+    assert(total("sink_counts", "n_turns") === n)
+    assert(obs.snapshot("route/sent") === n)
+  }
+
   test("watermarked tumbling-window counts ≡ batch window aggregation") {
     val inputDir = tmpDir("wstream-in")
     val outDir = tmpDir("wstream-out")

@@ -10,6 +10,18 @@ import org.apache.spark.sql.functions._
   */
 class TailSampleSpec extends SparkTestBase {
 
+  test("decideBatch: a grok miss is not a tool") {
+    import spark.implicits._
+    val ts = Timestamp.valueOf("2024-01-01 00:00:00")
+    val turns = Seq(
+      Turn("c1", 0, "assistant", "tool=search status=OK latency=5ms", "search", ts),
+      Turn("c1", 1, "assistant", "no tool token here", "", ts)).toDS().toDF()
+    val r = TailSample.decideBatch(Parse.parseGrok(turns),
+      Seq(TailSample.TailPolicy.StatusCode)).head()
+    assert(r.getAs[Long]("n_turns") === 2L)
+    assert(r.getAs[Int]("n_tools_distinct") === 1)
+  }
+
   test("streaming conversation decisions ≡ batch rollup; error policy keeps errors") {
     val inputDir = tmpDir("tail-in")
     val outDir = tmpDir("tail-out")
