@@ -159,7 +159,8 @@ object Bench {
       forceAll(graft.ops.SftPrep.truncateToBudget(turns, budget = 64))
       val cands = turns.where(col("role") === "assistant")
         .select(col("conv_id"), col("turn_idx"), col("text"),
-          (lit(0L) - coalesce(Parse.latencyMs(col("text")), lit(0L)))
+          (lit(0L) - coalesce(nullif(regexp_extract(col("text"),
+            "latency=([0-9]+)ms", 1), lit("")).cast("long"), lit(0L)))
             .as("score"))
       forceAll(graft.ops.SftPrep.preferencePairs(cands, "conv_id",
         "turn_idx", "score", "text"))

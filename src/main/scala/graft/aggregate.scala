@@ -9,15 +9,21 @@ import org.apache.spark.sql.functions._
   *
   * Skew story: conversation sizes are Zipf — a handful of conv_ids own a
   * large share of rows. Plain `groupBy(conv_id)` puts each hot key on ONE
-  * reduce task. For count/min/max/sum Spark's map-side partial aggregation
-  * already collapses most of that, but `collect_set`/`count_distinct` force
-  * full rows to the reducer. The salted two-phase plan bounds any single
-  * task's share of a hot key to 1/SALT:
+  * reduce task. The salted plan bounds any single task's share of a hot key
+  * to 1/SALT, and keeping the tool in the grouping key makes distinct-tool
+  * counting a plain count over groups, so every phase is a fixed-width,
+  * codegen'd `HashAggregate` with map-side partial aggregation, exact for
+  * any tool vocabulary:
   *
-  *   phase 1: groupBy(conv_id, salt = pmod(xxhash64(conv_id, turn_idx), SALT))
-  *            → partial count/min/max/sum + collect_set(tool)  (set ≤ 13)
-  *   phase 2: groupBy(conv_id) → merge partials; distinct tools =
-  *            size(array_distinct(flatten(collect_list(partial sets))))
+  *   phase 1: groupBy(conv_id, salt = pmod(xxhash64(conv_id, turn_idx), SALT),
+  *            tool_invoked) → partial count/sum/min/max
+  *   phase 2: groupBy(conv_id, tool_invoked) → merge the salts
+  *   phase 3: groupBy(conv_id) → merge the tools; distinct tools =
+  *            count of the counted tools, one row each
+  *
+  * Per-group object sets (`collect_set`) would force ObjectHashAggregate,
+  * whose sort-based spill fallback collapses under memory pressure
+  * (measured: 210 s vs 14 s on the same 20M-turn corpus, BASELINE.md).
   *
   * The salt is DETERMINISTIC (xxhash64 of row keys, never rand()) so retries
   * and recomputations route rows identically (SURVEY.md §7.4). AQE skew
@@ -42,97 +48,56 @@ object Aggregate {
     routed.groupBy(col(Route.SinkCol)).agg(count(lit(1)).as("n_turns"))
 
   /** The tool a turn counts toward `n_tools_distinct`: null for "none" and
-    * for a grok miss (""), as in [[toolMask]], whose vocabulary holds neither.
-    * Shared with [[TailSample.decideBatch]].
+    * for a grok miss (""). Shared with [[TailSample.decideBatch]].
     */
   private[graft] def countedTool(toolInvoked: Column): Column =
     when(!toolInvoked.isin("none", ""), toolInvoked)
 
-  /** Per-conversation rollup, salted two-phase. Output:
+  /** Phase 1: salted partials keyed by (conv_id, _salt, keys…, tool_invoked). */
+  private def salted(df: DataFrame, salt: Int, keys: Column*): DataFrame =
+    df.withColumn("_salt", pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(salt.toLong)))
+      .groupBy(Seq(col("conv_id"), col("_salt")) ++ keys :+ col("tool_invoked"): _*)
+      .agg(
+        count(lit(1)).as("p_turns"),
+        sum(when(col("err_code").isNotNull, 1L).otherwise(0L)).as("p_errors"),
+        min(col("ts")).as("p_first"),
+        max(col("ts")).as("p_last"),
+        sum(col("latency_ms")).as("p_lat"))
+
+  /** Per-conversation rollup, salted. Output:
     * (conv_id, n_turns, n_errors, n_tools_distinct, first_ts, last_ts,
     *  sum_latency_ms)
     */
-  def convRollup(parsed: DataFrame, salt: Int = DefaultSalt): DataFrame = {
-    val partial = parsed
-      .withColumn("_salt", pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(salt.toLong)))
-      .groupBy(col("conv_id"), col("_salt"))
-      .agg(
-        count(lit(1)).as("p_turns"),
-        sum(when(col("err_code").isNotNull, 1L).otherwise(0L)).as("p_errors"),
-        min(col("ts")).as("p_first"),
-        max(col("ts")).as("p_last"),
-        sum(col("latency_ms")).as("p_lat"),
-        collect_set(countedTool(col("tool_invoked"))).as("p_tools"))
-    partial
-      .groupBy(col("conv_id"))
-      .agg(
-        sum(col("p_turns")).as("n_turns"),
-        sum(col("p_errors")).as("n_errors"),
-        size(array_distinct(flatten(collect_list(col("p_tools"))))).as("n_tools_distinct"),
-        min(col("p_first")).as("first_ts"),
-        max(col("p_last")).as("last_ts"),
-        sum(col("p_lat")).as("sum_latency_ms"))
-  }
+  def convRollup(parsed: DataFrame, salt: Int = DefaultSalt): DataFrame =
+    convRollupFromPartials(salted(parsed, salt))
 
-  /** ONE-PASS partials for the whole aggregate stage: a single salted
-    * shuffle over the full data keyed by (conv_id, salt, sink); both
-    * per-sink counts and per-conversation rollups derive from this small
-    * frame with near-free final aggregations.
-    *
-    * This is the 100 TB shape: the alternative (separate
-    * `sinkCounts(routed)` + `convRollup(routed)`) either shuffles the full
-    * data twice or persists the full routed frame — both non-scaling. Here
-    * map-side partial aggregation collapses each task's rows to its
-    * distinct (conv, salt, sink) keys before the only full-data shuffle,
-    * and the salt bounds any hot conversation's share of a reduce task.
+  /** Phase 1 with the sink in the key, so one frame feeds both
+    * [[sinkCountsFromPartials]] and [[convRollupFromPartials]].
     */
-  /** Distinct-tool bitmask: the tool vocabulary is small and known (the
-    * broadcast tool_dim), so per-group distinct tools is `bit_or` of a
-    * one-hot long — a FIXED-WIDTH aggregate that stays in codegen'd
-    * HashAggregate. `collect_set` at this cardinality forces
-    * ObjectHashAggregate with per-group java sets, whose sort-based
-    * spill fallback collapses under memory pressure (measured: 210 s vs
-    * 14 s on the same 20M-turn corpus). Bitmask = the 100 TB shape for
-    * small-vocabulary distinct counting; [[convRollup]] keeps the
-    * set-based variant for unbounded vocabularies.
-    */
-  def toolMask(toolInvoked: Column,
-               vocab: Seq[String] = TranscriptGen.toolNames): Column = {
-    // shiftleft wraps mod 64 — a larger vocab would silently alias bits;
-    // callers with unbounded vocabularies must use the set-based rollup.
-    require(vocab.size <= 64, s"toolMask vocab too large (${vocab.size} > 64)")
-    val pos = array_position(typedLit(vocab), toolInvoked)
-    when(toolInvoked =!= "none" && pos > 0,
-      call_function("shiftleft", lit(1L), (pos - 1).cast("int")))
-      .otherwise(lit(0L))
-  }
-
-  def partials(routed: DataFrame, salt: Int = DefaultSalt,
-               vocab: Seq[String] = TranscriptGen.toolNames): DataFrame =
-    routed
-      .withColumn("_salt",
-        pmod(xxhash64(col("conv_id"), col("turn_idx")), lit(salt.toLong)))
-      .groupBy(col("conv_id"), col("_salt"), col(Route.SinkCol))
-      .agg(
-        count(lit(1)).as("p_turns"),
-        sum(when(col("err_code").isNotNull, 1L).otherwise(0L)).as("p_errors"),
-        min(col("ts")).as("p_first"),
-        max(col("ts")).as("p_last"),
-        sum(col("latency_ms")).as("p_lat"),
-        bit_or(toolMask(col("tool_invoked"), vocab)).as("p_toolmask"))
+  def partials(routed: DataFrame, salt: Int = DefaultSalt): DataFrame =
+    salted(routed, salt, col(Route.SinkCol))
 
   /** Per-sink counts from [[partials]] — tiny final aggregation. */
   def sinkCountsFromPartials(partials: DataFrame): DataFrame =
     partials.groupBy(col(Route.SinkCol)).agg(sum(col("p_turns")).as("n_turns"))
 
-  /** Per-conversation rollup from [[partials]] — tiny final aggregation. */
+  /** Phases 2 and 3 of the rollup, over any phase-1 frame: the rollup's own
+    * or [[partials]] (its sink key is merged away with the salt).
+    */
   def convRollupFromPartials(partials: DataFrame): DataFrame =
     partials
+      .groupBy(col("conv_id"), col("tool_invoked"))
+      .agg(
+        sum(col("p_turns")).as("p_turns"),
+        sum(col("p_errors")).as("p_errors"),
+        min(col("p_first")).as("p_first"),
+        max(col("p_last")).as("p_last"),
+        sum(col("p_lat")).as("p_lat"))
       .groupBy(col("conv_id"))
       .agg(
         sum(col("p_turns")).as("n_turns"),
         sum(col("p_errors")).as("n_errors"),
-        bit_count(bit_or(col("p_toolmask"))).cast("int").as("n_tools_distinct"),
+        count(countedTool(col("tool_invoked"))).cast("int").as("n_tools_distinct"),
         min(col("p_first")).as("first_ts"),
         max(col("p_last")).as("last_ts"),
         sum(col("p_lat")).as("sum_latency_ms"))

@@ -108,19 +108,10 @@ object PipelineConfig {
     val sampled =
       if (cfg.samplePct >= 100.0) turns
       else Sampler.sampleConversations(turns, cfg.samplePct)
-    val g = graft.expr.GrokExtract.grok_extract(col("text"), cfg.grokPattern)
-    val parsed = sampled
-      .withColumn("_g", g)
-      .withColumn("tool_invoked", coalesce(col("_g.tool_invoked"), lit("")))
-      .withColumn("status", coalesce(col("_g.status"), lit("")))
-      .withColumn("err_code",
-        when(col("_g.status").rlike("^E[0-9]{3}$"), col("_g.status")))
-      .withColumn("latency_ms",
-        coalesce(col("_g.latency_ms").cast("long"), lit(-1L)))
-      .drop("_g")
-    val enriched = Enrich.enrich(parsed,
-      TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
-    Route.assign(enriched, cfg.sinkSpecs)
+    Route.assign(
+      Enrich.enrich(Parse.parseGrok(sampled, cfg.grokPattern),
+        TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF()),
+      cfg.sinkSpecs)
   }
 }
 
@@ -197,8 +188,9 @@ object ServiceConfig {
     * in streaming form (§2.10 cloningfanoutconnector / §3.1 shared
     * receiver): ONE file-source query drives ALL pipelines. Each
     * micro-batch is persisted once; every pipeline's config-compiled
-    * transform + partitioned sink write runs against the cached batch (the
-    * pipelines' writes concurrently, [[Commit.all]]), so the source is
+    * transform and commit (routed rows, sink counts and lineage, as
+    * [[startStreams]] writes them) run against the cached batch (the
+    * pipelines concurrently, [[Commit.all]]), so the source is
     * scanned once per trigger instead of once per pipeline
     * (N source scans → 1 — at 10^12-turn scale the source scan dominates,
     * so per-pipeline rescans multiply the whole job's IO by N).
@@ -206,8 +198,9 @@ object ServiceConfig {
     * The trade vs [[startStreams]]: one offset log — pipelines advance and
     * recover TOGETHER (the reference's shared-receiver topology), while
     * startStreams gives each pipeline an independent failure domain.
-    * The routed layout matches startStreams ($outDir/<name>/routed/batch_id=*),
-    * and writes stay idempotent per (pipeline, batchId) so checkpoint
+    * The output layout matches startStreams ($outDir/<name>/routed/batch_id=*,
+    * sink_counts/batch_id=*, _lineage/stage=route/batch_id=*), and writes
+    * stay idempotent per (pipeline, batchId) so checkpoint
     * replay after a crash overwrites instead of duplicating.
     */
   def startStreamsShared(spark: SparkSession, inputDir: String,
@@ -227,8 +220,9 @@ object ServiceConfig {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val cached = batch.persist()
         try Commit.all(svc.pipelines.map { case (name, cfg) =>
-          () => Route.writePartitioned(PipelineConfig.transform(spark, cached, cfg),
-            s"$outDir/$name/routed/batch_id=$batchId")
+          () => StreamingPipeline.commitMicroBatch(
+            PipelineConfig.transform(spark, cached, cfg), batchId,
+            s"$outDir/$name", None)
         }: _*) finally { cached.unpersist(); () }
       }
       .start()

@@ -1,47 +1,30 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Parse stage — the attributesprocessor `extract` action (SURVEY.md §2.3,
   * ref `internal/processor/attraction/attraction.go: extractAttributes`):
-  * regex named-capture groups over the text column become typed fields.
-  *
-  * v1 composes built-in `regexp_extract` per field (codegen'd `RegExpExtract`
-  * caches the compiled pattern when it is a literal — it is). v2
-  * (`parseGrok`) does one-pass multi-group extraction with the custom
-  * [[graft.expr.GrokExtract]] Catalyst expression. Both stay inside
-  * whole-stage codegen; no UDFs anywhere.
+  * regex named-capture groups over the text column become typed fields,
+  * in one pass with the custom [[graft.expr.GrokExtract]] Catalyst
+  * expression. It stays inside whole-stage codegen; no UDFs anywhere.
   */
 object Parse {
 
   /** tool=<word> status=<token> latency=<n>ms — the grok-able layout
     * emitted by TranscriptGen / FIXTURES.md §1.
     */
-  val toolPat    = "tool=([A-Za-z0-9_]+)"
-  val statusPat  = "status=([A-Za-z0-9]+)"
-  val latencyPat = "latency=([0-9]+)ms"
+  val DefaultPattern =
+    "tool=(?<tool_invoked>[A-Za-z0-9_]+) status=(?<status>[A-Za-z0-9]+) latency=(?<latency_ms>[0-9]+)ms"
 
-  def toolInvoked(text: Column): Column = regexp_extract(text, toolPat, 1)
-  def status(text: Column): Column     = regexp_extract(text, statusPat, 1)
-  def latencyMs(text: Column): Column  =
-    // regexp_extract returns "" on miss; nullif before cast avoids NumberFormatException under ANSI
-    nullif(regexp_extract(text, latencyPat, 1), lit("")).cast("long")
-
-  /** Built-ins-only parse: ParsedTurn-shaped output. */
-  def parse(turns: DataFrame): DataFrame =
+  /** ParsedTurn-shaped output. `pattern` must name the groups
+    * `tool_invoked`, `status` and `latency_ms`; a miss gives
+    * `tool_invoked` = "", `status` = "", `err_code` = null and
+    * `latency_ms` = -1.
+    */
+  def parseGrok(turns: DataFrame, pattern: String = DefaultPattern): DataFrame =
     turns
-      .withColumn("tool_invoked", toolInvoked(col("text")))
-      .withColumn("status", status(col("text")))
-      .withColumn("err_code",
-        when(col("status").rlike("^E[0-9]{3}$"), col("status")))
-      .withColumn("latency_ms", coalesce(latencyMs(col("text")), lit(-1L)))
-
-  /** One-pass parse via the custom GrokExtract expression (§4.3). */
-  def parseGrok(turns: DataFrame): DataFrame = {
-    val pat = "tool=(?<tool_invoked>[A-Za-z0-9_]+) status=(?<status>[A-Za-z0-9]+) latency=(?<latency_ms>[0-9]+)ms"
-    turns
-      .withColumn("_g", graft.expr.GrokExtract.grok_extract(col("text"), pat))
+      .withColumn("_g", graft.expr.GrokExtract.grok_extract(col("text"), pattern))
       .withColumn("tool_invoked", coalesce(col("_g.tool_invoked"), lit("")))
       .withColumn("status", coalesce(col("_g.status"), lit("")))
       .withColumn("err_code",
@@ -49,5 +32,4 @@ object Parse {
       .withColumn("latency_ms",
         coalesce(col("_g.latency_ms").cast("long"), lit(-1L)))
       .drop("_g")
-  }
 }

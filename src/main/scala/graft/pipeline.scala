@@ -30,18 +30,14 @@ object Pipeline {
 
   /** Pure transform portion (no writes) — shared by batch and streaming. */
   def transform(turns: DataFrame, roleDim: DataFrame, toolDim: DataFrame,
-                sinks: Seq[SinkSpec] = Route.defaultSinks,
-                useGrok: Boolean = true): DataFrame = {
-    val parsed = if (useGrok) Parse.parseGrok(turns) else Parse.parse(turns)
-    val enriched = Enrich.enrich(parsed, roleDim, toolDim)
-    Route.assign(enriched, sinks)
-  }
+                sinks: Seq[SinkSpec] = Route.defaultSinks): DataFrame =
+    Route.assign(Enrich.enrich(Parse.parseGrok(turns), roleDim, toolDim), sinks)
 
   /** Full batch run with fanout write + aggregates + lineage.
-    * The routed frame is persisted once (cloningfanout analog) because three
-    * consumers read it: the partitioned write and both aggregates. The four
-    * writes run concurrently ([[Commit.all]]); both frames are unpersisted
-    * only after every write has ended.
+    * The routed frame is persisted once (cloningfanout analog) because four
+    * consumers read it: the partitioned write, both aggregates and the
+    * lineage. The four writes run concurrently ([[Commit.all]]); the frame
+    * is unpersisted only after every write has ended.
     * `convClustered`: pass true when `turns` comes from a conv-bucketed
     * scan ([[BucketedCorpus.open]]) — selects [[Aggregate.saltFor]]'s
     * shuffle-free salt.
@@ -58,24 +54,10 @@ object Pipeline {
       .map(c => PipelineConfig.transform(spark, turns, c))
       .getOrElse(transform(turns, roleDim, toolDim, sinks))
       .persist()
-    // The bitmask rollup is bound to the default tool vocabulary; a
-    // config-driven topology can extract tool names outside it (mask 0 →
-    // silent undercount), so config runs take the set-based rollup instead.
-    val maskSafe = config.isEmpty
-    // partials is tiny (one row per (conv_id, salt, sink)) but feeds BOTH
-    // final aggregates — persist it or the full-data salted shuffle over
-    // routed runs twice (Spark does not reuse exchanges across queries).
-    val partials =
-      if (maskSafe)
-        Some(Aggregate.partials(routed,
-          salt = Aggregate.saltFor(convClustered)).persist())
-      else None
     try {
-      val counts = partials.map(Aggregate.sinkCountsFromPartials)
-        .getOrElse(Aggregate.sinkCounts(routed))
-      val rollup = partials.map(Aggregate.convRollupFromPartials)
-        .getOrElse(Aggregate.convRollup(routed, salt = config.map(_.salt)
-          .getOrElse(Aggregate.DefaultSalt)))
+      val counts = Aggregate.sinkCounts(routed)
+      val rollup = Aggregate.convRollup(routed,
+        salt = config.fold(Aggregate.saltFor(convClustered))(_.salt))
       var n = 0L
       Commit.all(
         () => Route.writePartitioned(routed, s"$outDir/routed"),
@@ -90,10 +72,7 @@ object Pipeline {
         readWritten(spark, routed, s"$outDir/routed", Route.PartitionCols),
         readWritten(spark, counts, s"$outDir/sink_counts"),
         readWritten(spark, rollup, s"$outDir/conv_rollup"))
-    } finally {
-      partials.foreach(_.unpersist())
-      routed.unpersist()
-    }
+    } finally routed.unpersist()
   }
 
   /** Open what was just written from `written` with the schema the write

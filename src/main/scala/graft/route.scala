@@ -13,11 +13,10 @@ import org.apache.spark.sql.functions._
   * invariant "routed union == input" holds by construction.
   *
   * Scale: `assign` is a single narrow `CASE WHEN` projection (whole-stage
-  * codegen). Writing is ONE pass with `partitionBy("sink", ...)` — at 10^12
-  * rows, N filtered re-scans (the collector's literal fanout) would read the
-  * batch N times; a partitioned single write reads it once. The
-  * collector-literal strategy is kept as [[writeFanout]] for small N sinks
-  * where per-sink write options differ.
+  * codegen). Writing is ONE pass with `partitionBy("sink", ...)`: N
+  * filtered re-scans (the collector's literal fanout, one exporter per
+  * sink) would read the batch N times; a partitioned single write reads it
+  * once.
   */
 final case class SinkSpec(name: String, pred: Column)
 
@@ -46,7 +45,7 @@ object Route {
     SinkSpec("errors", col("err_code").rlike("^E5"))
   )
 
-  /** Single-pass partitioned fanout write — the scale path. Keyed by
+  /** Single-pass partitioned fanout write. Keyed by
     * sink/tool/role per the north rule ("per-sink tables keyed by tool and
     * role"). `sortWithinPartitions` gives reproducible file contents without
     * a global sort (SURVEY.md §7.4).
@@ -58,20 +57,4 @@ object Route {
       .write.format(format).mode("overwrite")
       .partitionBy(PartitionCols: _*)
       .save(outDir)
-
-  /** Collector-literal fanout: persist once (≈ cloningfanoutconnector's
-    * clone-once), then one filtered write per sink. Use when sinks need
-    * different formats/options; O(N) scans of the cached batch otherwise.
-    */
-  def writeFanout(routed: DataFrame, outDir: String, sinkNames: Seq[String],
-                  format: String = "parquet"): Unit = {
-    val cached = routed.persist()
-    try {
-      (sinkNames :+ RestSink).distinct.foreach { s =>
-        cached.filter(col(SinkCol) === s).drop(SinkCol)
-          .sortWithinPartitions(col("conv_id"), col("turn_idx"))
-          .write.format(format).mode("overwrite").save(s"$outDir/sink=$s")
-      }
-    } finally { cached.unpersist() }
-  }
 }

@@ -58,15 +58,16 @@ object StreamingPipeline {
       .start()
   }
 
-  /** One micro-batch's commit, shared by [[start]] and [[startWithConfig]]:
+  /** One micro-batch's commit, shared by [[start]], [[startWithConfig]] and
+    * [[ServiceConfig.startStreamsShared]]:
     * the routed rows, the per-sink counts and the lineage, written
     * concurrently ([[Commit.all]]) from the batch persisted once.
     * Idempotent: every output goes to a deterministic `batch_id=<id>`
     * directory with mode("overwrite"), so a replayed batch rewrites the
     * same bytes.
     */
-  private def commitMicroBatch(batch: DataFrame, batchId: Long, outDir: String,
-                               obs: Option[ObsMetrics]): Unit = {
+  private[graft] def commitMicroBatch(batch: DataFrame, batchId: Long, outDir: String,
+                                      obs: Option[ObsMetrics]): Unit = {
     val cached = batch.persist()
     try {
       var sent = 0L

@@ -6,7 +6,7 @@ class AggregateSpec extends SparkTestBase {
 
   test("salted rollup ≡ unsalted rollup on skewed corpus") {
     val turns = TranscriptGen.turns(spark, 500, seed = 42).drop("_truth")
-    val parsed = Parse.parse(turns)
+    val parsed = Parse.parseGrok(turns)
     val salted = Aggregate.convRollup(parsed, salt = 16)
       .withColumn("n_tools_distinct", col("n_tools_distinct").cast("long"))
     val plain = Aggregate.convRollupUnsalted(parsed)
@@ -16,7 +16,7 @@ class AggregateSpec extends SparkTestBase {
 
   test("one-pass partials path ≡ direct aggregates") {
     val turns = TranscriptGen.turns(spark, 400, seed = 42).drop("_truth")
-    val routed = Route.assign(Parse.parse(turns), Route.defaultSinks)
+    val routed = Route.assign(Parse.parseGrok(turns), Route.defaultSinks)
     val partials = Aggregate.partials(routed).cache()
     val counts = Aggregate.sinkCountsFromPartials(partials)
     val rollup = Aggregate.convRollupFromPartials(partials)
@@ -33,7 +33,7 @@ class AggregateSpec extends SparkTestBase {
 
   test("rollup values match a hand-computed conversation") {
     val turns = TranscriptGen.turns(spark, 50, seed = 42).drop("_truth")
-    val parsed = Parse.parse(turns)
+    val parsed = Parse.parseGrok(turns)
     val conv = parsed.groupBy("conv_id").count().orderBy(desc("count")).head().getString(0)
     val rows = parsed.where(col("conv_id") === conv).collect()
     val r = Aggregate.convRollup(parsed).where(col("conv_id") === conv).head()
@@ -46,7 +46,7 @@ class AggregateSpec extends SparkTestBase {
 
   test("salted plan really has two aggregate phases on distinct path") {
     val turns = TranscriptGen.turns(spark, 50, seed = 42).drop("_truth")
-    val plan = Aggregate.convRollup(Parse.parse(turns)).queryExecution.executedPlan.toString
+    val plan = Aggregate.convRollup(Parse.parseGrok(turns)).queryExecution.executedPlan.toString
     // two-phase: partial+final of stage1 (conv_id, _salt) then stage2 (conv_id)
     assert("HashAggregate".r.findAllIn(plan).size >= 4, plan)
   }

@@ -13,7 +13,7 @@ class ObsSpec extends SparkTestBase {
     spark.listenerManager.register(listener)
     try {
       val turns = TranscriptGen.turns(spark, 100, seed = 42).drop("_truth")
-      val n = Obs.observed(Parse.parse(turns), "parse").count()
+      val n = Obs.observed(Parse.parseGrok(turns), "parse").count()
       // listener bus is async — poll briefly
       val deadline = System.nanoTime() + 10_000_000_000L
       while (metrics.snapshot.getOrElse("parse/accepted", 0L) < n &&

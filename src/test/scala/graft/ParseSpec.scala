@@ -1,6 +1,24 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+/** The regexp-only parse: one built-in `regexp_extract` per field, no custom
+  * expression. Ground-truth and parity reference for [[Parse.parseGrok]].
+  */
+object RegexpParse {
+  def parse(turns: DataFrame): DataFrame =
+    turns
+      .withColumn("tool_invoked", regexp_extract(col("text"), "tool=([A-Za-z0-9_]+)", 1))
+      .withColumn("status", regexp_extract(col("text"), "status=([A-Za-z0-9]+)", 1))
+      .withColumn("err_code",
+        when(col("status").rlike("^E[0-9]{3}$"), col("status")))
+      // regexp_extract returns "" on miss; nullif before cast avoids
+      // NumberFormatException under ANSI
+      .withColumn("latency_ms", coalesce(
+        nullif(regexp_extract(col("text"), "latency=([0-9]+)ms", 1), lit("")).cast("long"),
+        lit(-1L)))
+}
 
 class ParseSpec extends SparkTestBase {
 
@@ -29,7 +47,7 @@ class ParseSpec extends SparkTestBase {
 
   test("parse recovers generator ground truth (built-ins path)") {
     val t = TranscriptGen.turns(spark, 300, seed = 42)
-    val parsed = Parse.parse(t)
+    val parsed = RegexpParse.parse(t)
     val bad = parsed.where(
       col("tool_invoked") =!= col("_truth.tool_invoked") ||
       col("status") =!= col("_truth.status") ||
@@ -41,7 +59,7 @@ class ParseSpec extends SparkTestBase {
   test("parseGrok ≡ parse (one-pass custom expression path)") {
     val t = TranscriptGen.turns(spark, 300, seed = 42).drop("_truth")
     val cols = Seq("conv_id", "turn_idx", "tool_invoked", "status", "err_code", "latency_ms")
-    val a = Parse.parse(t).select(cols.map(col): _*)
+    val a = RegexpParse.parse(t).select(cols.map(col): _*)
     val b = Parse.parseGrok(t).select(cols.map(col): _*)
     assert(a.exceptAll(b).isEmpty && b.exceptAll(a).isEmpty)
   }

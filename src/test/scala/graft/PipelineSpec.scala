@@ -41,17 +41,21 @@ class PipelineSpec extends SparkTestBase {
   test("a grok miss is not a tool: default and config runBatch agree") {
     import spark.implicits._
     val ts = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    // c2: a tool outside TranscriptGen.toolNames counts like any other
     val turns = Seq(
       ("c1", 0, "assistant", "tool=search status=OK latency=5ms", "search", ts),
-      ("c1", 1, "assistant", "no tool token here", "", ts))
+      ("c1", 1, "assistant", "no tool token here", "", ts),
+      ("c2", 0, "assistant", "tool=search status=OK latency=5ms", "search", ts),
+      ("c2", 1, "assistant", "tool=my_tool status=OK latency=7ms", "my_tool", ts))
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
     val cfg = PipelineConfig.fromJson(PipelineConfig.defaultJson)
     Seq("default" -> None, "config" -> Some(cfg)).foreach { case (name, config) =>
       val res = Pipeline.runBatch(spark, turns, tmpDir(s"pipe-miss-$name"),
         config = config)
-      val r = res.convRollup.head()
-      assert(r.getAs[Long]("n_turns") === 2L, name)
-      assert(r.getAs[Int]("n_tools_distinct") === 1, name)
+      val r = res.convRollup.collect().map(r => r.getAs[String]("conv_id") -> r).toMap
+      assert(r("c1").getAs[Long]("n_turns") === 2L, name)
+      assert(r("c1").getAs[Int]("n_tools_distinct") === 1, name)
+      assert(r("c2").getAs[Int]("n_tools_distinct") === 2, name)
     }
   }
 

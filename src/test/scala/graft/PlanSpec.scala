@@ -62,29 +62,34 @@ class PlanSpec extends SparkTestBase {
         "graft_corpus_plan", 4)
       val routed = Pipeline.transform(opened,
         TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
-      val rollup = Aggregate.convRollupFromPartials(Aggregate.partials(routed))
-      rollup.count()
-      val plan = rollup.queryExecution.executedPlan.toString
-      // HashPartitioning(conv_id) from the bucketed scan satisfies every
-      // conv-keyed ClusteredDistribution → broadcast exchanges only
-      assert(!plan.contains("Exchange hashpartitioning"), plan.take(4000))
-      assert(!plan.contains("Exchange SinglePartition"), plan.take(4000))
-      // and the zero-shuffle plan computes the same rollup as the scattered one
       val expected = Aggregate.convRollupFromPartials(
         Aggregate.partials(Pipeline.transform(turns.repartition(7),
           TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())))
-      assert(rollup.exceptAll(expected).isEmpty &&
-        expected.exceptAll(rollup).isEmpty)
+      // the partials chain and the rollup runBatch takes on this layout
+      Seq(Aggregate.convRollupFromPartials(Aggregate.partials(routed)),
+          Aggregate.convRollup(routed, salt = Aggregate.saltFor(true))).foreach { rollup =>
+        rollup.count()
+        val plan = rollup.queryExecution.executedPlan.toString
+        // HashPartitioning(conv_id) from the bucketed scan satisfies every
+        // conv-keyed ClusteredDistribution → broadcast exchanges only
+        assert(!plan.contains("Exchange hashpartitioning"), plan.take(4000))
+        assert(!plan.contains("Exchange SinglePartition"), plan.take(4000))
+        // and the zero-shuffle plan computes the same rollup as the scattered one
+        assert(rollup.exceptAll(expected).isEmpty &&
+          expected.exceptAll(rollup).isEmpty)
+      }
     } finally spark.sql("DROP TABLE IF EXISTS graft_corpus_plan")
   }
 
   test("salted aggregation has map-side partial aggregation") {
     val turns = TranscriptGen.turns(spark, 100, seed = 42).drop("_truth")
-    val routed = Route.assign(Parse.parse(turns), Route.defaultSinks)
-    val plan = planOf(Aggregate.partials(routed))
-    // partial + final HashAggregate pair around one exchange, and no
-    // ObjectHashAggregate (the bitmask keeps aggregation fixed-width)
-    assert("HashAggregate".r.findAllIn(plan).size >= 2, plan.take(3000))
-    assert(!plan.contains("ObjectHashAggregate"), plan.take(3000))
+    val routed = Route.assign(Parse.parseGrok(turns), Route.defaultSinks)
+    // partial + final HashAggregate pair around each exchange, and no
+    // ObjectHashAggregate (tool-keyed groups keep aggregation fixed-width)
+    Seq(Aggregate.partials(routed), Aggregate.convRollup(routed)).foreach { df =>
+      val plan = planOf(df)
+      assert("HashAggregate".r.findAllIn(plan).size >= 2, plan.take(3000))
+      assert(!plan.contains("ObjectHashAggregate"), plan.take(3000))
+    }
   }
 }

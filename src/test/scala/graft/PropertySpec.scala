@@ -96,7 +96,7 @@ class PropertySpec extends SparkTestBase {
   }
 
   test("route always assigns exactly one sink for generated predicate lists") {
-    val turns = Parse.parse(
+    val turns = Parse.parseGrok(
       TranscriptGen.turns(spark, 150, seed = 42).drop("_truth")).cache()
     val predPool = Seq(
       SinkSpec("p_lat", col("latency_ms") > 2500),

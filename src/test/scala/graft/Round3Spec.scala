@@ -227,6 +227,12 @@ class Round3Spec extends SparkTestBase {
         .groupBy(col(Route.SinkCol)).count()
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       assert(streamed === expected, name)
+      // each pipeline commits like startStreams: lineage and sink counts
+      // cover every input row
+      def total(d: String, c: String): Long = spark.read
+        .parquet(s"$dir/out/$name/$d/batch_id=*").agg(sum(c)).head().getLong(0)
+      assert(total("_lineage/stage=route", "rows") === turns.count(), name)
+      assert(total("sink_counts", "n_turns") === turns.count(), name)
     }
     turns.unpersist()
   }

@@ -20,7 +20,7 @@ class RouteSpec extends SparkTestBase {
 
   test("first-match-wins on overlapping predicates") {
     val turns = TranscriptGen.turns(spark, 100, seed = 42).drop("_truth")
-    val parsed = Parse.parse(turns)
+    val parsed = Parse.parseGrok(turns)
     val overlapping = Seq(
       SinkSpec("a", col("latency_ms") >= 0),        // matches everything
       SinkSpec("b", col("latency_ms") >= 0))
@@ -31,7 +31,7 @@ class RouteSpec extends SparkTestBase {
 
   test("per-sink counts equal independently computed predicate counts") {
     val turns = TranscriptGen.turns(spark, 400, seed = 42).drop("_truth")
-    val parsed = Enrich.enrich(Parse.parse(turns),
+    val parsed = Enrich.enrich(Parse.parseGrok(turns),
       TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
     val routed = Route.assign(parsed, Route.defaultSinks)
     val counts = Aggregate.sinkCounts(routed).collect()
@@ -45,7 +45,7 @@ class RouteSpec extends SparkTestBase {
     assert(counts("rest") === nAll - nSearch - nErr)
   }
 
-  test("fanout write round-trips (both write strategies)") {
+  test("partitioned write round-trips") {
     val turns = TranscriptGen.turns(spark, 120, seed = 7).drop("_truth")
     val routed = Pipeline.transform(turns,
       TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
@@ -53,9 +53,5 @@ class RouteSpec extends SparkTestBase {
     Route.writePartitioned(routed, d1)
     val back = spark.read.parquet(d1)
     assert(back.count() === turns.count())
-    val d2 = tmpDir("route-fan")
-    Route.writeFanout(routed, d2, Route.defaultSinks.map(_.name))
-    val back2 = spark.read.option("basePath", d2).parquet(s"$d2/sink=*")
-    assert(back2.count() === turns.count())
   }
 }
