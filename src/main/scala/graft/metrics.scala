@@ -112,7 +112,10 @@ object Obs {
 
   /** Per-partition lineage frame for one batch:
     * (batch_id, partition_id, stage, rows). A `groupBy(spark_partition_id())`
-    * — no mapPartitions, stays declarative.
+    * — no mapPartitions, stays declarative. The partitions are those of
+    * `df` as the caller passes it: for the routed frame these are the
+    * routed (pre-write) partitions, not the tasks of
+    * [[Route.writePartitioned]], which range-partitions the rows again.
     */
   def lineage(df: DataFrame, batchId: Long, stage: String): DataFrame =
     df.groupBy(spark_partition_id().as("partition_id"))

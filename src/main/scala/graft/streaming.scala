@@ -89,7 +89,8 @@ object StreamingPipeline {
     * YAML-driven service startup, SURVEY.md §3.1). All config-compiled
     * stages are narrow/broadcast, so the streaming plan is identical in
     * shape to the coded one. Commits like [[start]]: routed rows, per-sink
-    * counts and lineage per micro-batch.
+    * counts and lineage per micro-batch, and the same `stream_route`
+    * observe tag for [[ObsStreamingListener]].
     */
   def startWithConfig(spark: SparkSession, inputDir: String, outDir: String,
                       checkpointDir: String, cfg: PipelineConfig,
@@ -101,7 +102,7 @@ object StreamingPipeline {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inputDir)
       .withWatermark("ts", "10 minutes")
-    val routed = PipelineConfig.transform(spark, stream, cfg)
+    val routed = Obs.observed(PipelineConfig.transform(spark, stream, cfg), "stream_route")
     routed.writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))

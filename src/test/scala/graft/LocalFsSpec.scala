@@ -43,10 +43,6 @@ class LocalFsSpec extends SparkTestBase {
     fsImpl.fold(w)(w.option("fs.file.impl", _)).parquet(dir)
   }
 
-  private def partFiles(root: String): Seq[JPath] =
-    Files.walk(Paths.get(root)).iterator().asScala
-      .filter(_.getFileName.toString.matches("part-.*\\.parquet")).toSeq
-
   private def localFs: FileSystem =
     FileSystem.get(URI.create("file:///"), spark.sparkContext.hadoopConfiguration)
 

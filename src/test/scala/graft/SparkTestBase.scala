@@ -19,6 +19,16 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** Every `part-*` file under `dir`, at any depth. */
+  def partFiles(dir: String): Seq[java.nio.file.Path] = {
+    val s = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala
+        .filter(_.getFileName.toString.startsWith("part-")).toList
+    } finally s.close()
+  }
+
   override def afterAll(): Unit = {
     // session is shared across suites; don't stop it here
     super.afterAll()

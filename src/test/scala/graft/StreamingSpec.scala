@@ -63,18 +63,39 @@ class StreamingSpec extends SparkTestBase {
     val turns = TranscriptGen.turnsDs(spark, 100).toDF()
     turns.repartition(3).write.mode("append").parquet(inputDir)
     val obs = new ObsMetrics(spark)
-    val q = StreamingPipeline.startWithConfig(spark, inputDir, outDir, ckptDir,
-      PipelineConfig.fromJson(PipelineConfig.defaultJson),
-      maxFilesPerTrigger = 2, obs = Some(obs))
-    q.processAllAvailable()
-    q.stop()
-
+    val listener = new ObsStreamingListener(obs)
+    spark.streams.addListener(listener)
     val n = turns.count()
+    try {
+      val q = StreamingPipeline.startWithConfig(spark, inputDir, outDir, ckptDir,
+        PipelineConfig.fromJson(PipelineConfig.defaultJson),
+        maxFilesPerTrigger = 2, obs = Some(obs))
+      q.processAllAvailable()
+      q.stop()
+      // listener events are async — poll briefly
+      val deadline = System.nanoTime() + 10L * 1000000000L
+      while (obs.accepted("stream_route").value < n &&
+             System.nanoTime() < deadline) Thread.sleep(100)
+    } finally spark.streams.removeListener(listener)
+
     def total(dir: String, c: String): Long =
       spark.read.parquet(s"$outDir/$dir/batch_id=*").agg(sum(c)).head().getLong(0)
     assert(total("_lineage/stage=route", "rows") === n)
     assert(total("sink_counts", "n_turns") === n)
     assert(obs.snapshot("route/sent") === n)
+    assert(obs.snapshot("stream_route/accepted") === n)
+
+    // each micro-batch's routed write: at most dirs + P - 1 part files
+    val p = spark.sparkContext.defaultParallelism
+    val batches = new java.io.File(s"$outDir/routed").listFiles()
+      .filter(_.getName.startsWith("batch_id=")).map(_.getPath)
+    assert(batches.nonEmpty)
+    batches.foreach { b =>
+      val dirs = spark.read.parquet(b)
+        .select(Route.PartitionCols.map(col): _*).distinct().count()
+      val files = partFiles(b).size
+      assert(files <= dirs + p - 1, s"$b: $files files for $dirs directories, P = $p")
+    }
   }
 
   test("watermarked tumbling-window counts ≡ batch window aggregation") {
