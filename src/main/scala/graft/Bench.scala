@@ -83,38 +83,27 @@ object Bench {
   }
 
   /** Transcript pipeline throughput: nConvs conversations (~3.45 turns/conv
-    * at the Zipf default) through parse→enrich→route→aggregate, both
-    * aggregates materialized. One full-data pass: the salted partial
-    * aggregation is the only shuffle; per-sink counts, per-conversation
-    * rollups, and the turn count all derive from the (small) partials frame
-    * — no full-size persist (which would bottleneck on cache write, not
-    * pipeline compute). Returns (seconds, turns).
+    * at the Zipf default) through `Pipeline.runBatch`. Returns
+    * (seconds, turns).
     */
   def pipelineRun(spark: SparkSession, nConvs: Long): (Double, Long) =
     pipelineRunFrom(spark, TranscriptGen.turnsDs(spark, nConvs).toDF())
 
-  /** Same pipeline over a caller-supplied turns frame (e.g. a parquet
-    * scan — the production shape; the vectorized reader feeds codegen
-    * directly, unlike the allocation-heavy in-memory generator).
-    *
-    * `salt`: pass 1 for conv-clustered (bucketed) input — the aggregation
-    * is then shuffle-free, so there is no shuffle skew for the salt to
-    * defuse and it only multiplies the aggregate's group cardinality
-    * (measured ~1.7× slower at salt=16 on the bucketed corpus).
+  /** `Pipeline.runBatch` over a caller-supplied turns frame (e.g. a parquet
+    * scan — the production shape), commit included, into a scratch output
+    * directory deleted afterwards. `convClustered`: pass true for a
+    * conv-bucketed scan, as `runBatch` expects. Returns (seconds, turns
+    * routed).
     */
   def pipelineRunFrom(spark: SparkSession, turns: org.apache.spark.sql.DataFrame,
-                      salt: Int = Aggregate.DefaultSalt): (Double, Long) = {
-    val routed = Pipeline.transform(turns,
-      TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
-    val partials = Aggregate.partials(routed, salt = salt).persist()
-    var n = 0L
-    val sec = time {
-      n = Aggregate.sinkCountsFromPartials(partials)
-        .collect().map(_.getLong(1)).sum
-      Aggregate.convRollupFromPartials(partials).count()
-    }
-    partials.unpersist(blocking = true)
-    (sec, n)
+                      convClustered: Boolean = false): (Double, Long) = {
+    val out = java.nio.file.Files.createTempDirectory("graft-bench-pipeline")
+    val obs = new ObsMetrics(spark)
+    try {
+      val sec = time(Pipeline.runBatch(spark, turns, out.toString,
+        obs = Some(obs), convClustered = convClustered))
+      (sec, obs.sent("route").value)
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(out.toFile)
   }
 
   /** SFT render job for the scaling bench: [[graft.ops.SftPrep.chatTemplate]]
@@ -242,7 +231,7 @@ object Bench {
     val turnsPerSec = pipeTurns / pipeSec
 
     // production shape: same pipeline over a conv-bucketed table scan
-    // (zero data shuffle — the 100 TB layout; corpus written once,
+    // (shuffle-free aggregation — the 100 TB layout; corpus written once,
     // untimed). Guarded: a failure here (e.g. no /dev/shm) must not sink
     // the whole bench artifact — the row reports an error instead.
     val bkt = Try {
@@ -252,9 +241,8 @@ object Bench {
         BucketedCorpus.write(TranscriptGen.turnsDs(spark, 145000L).toDF(),
           bktDir, "graft_bench_corpus", buckets = 32)
       def bkt = BucketedCorpus.open(spark, bktDir, "graft_bench_corpus", 32)
-      val bktSalt = Aggregate.saltFor(convClustered = true)
-      pipelineRunFrom(spark, bkt, bktSalt) // warm
-      val (s, _, b) = measured(pipelineRunFrom(spark, bkt, bktSalt))
+      pipelineRunFrom(spark, bkt, convClustered = true) // warm
+      val (s, _, b) = measured(pipelineRunFrom(spark, bkt, convClustered = true))
       (s, b)
     }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 /** CLI entry: run the full batch pipeline on a synthetic corpus and print
   * what it did. Usage: runMain graft.Main [nConvs] [outDir] [configJsonPath]
   * With a config path, the topology (grok pattern, sinks, sampling) comes
-  * from JSON (PipelineConfig) instead of the coded defaults — the
+  * from JSON instead of `PipelineConfig.default` — the
   * reference's YAML-driven service startup (SURVEY.md §3.1).
   */
 object Main {
@@ -57,8 +57,7 @@ object Main {
     res.convRollup.orderBy(desc("n_turns")).show(5, truncate = false)
     println(s"== obsreport counters: ${obs.snapshot}")
     println("== routed physical plan:")
-    Pipeline.transform(turns,
-      TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
+    PipelineConfig.transform(spark, turns, cfg.getOrElse(PipelineConfig.default))
       .explain("formatted")
     spark.stop()
   }

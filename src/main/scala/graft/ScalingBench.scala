@@ -9,8 +9,9 @@ import org.apache.spark.sql.SparkSession
   * eff = (tps32 / tps8) / 4.
   */
 /** Task-metrics accumulator: total bytes scanned vs shuffled during a
-  * timed region — the plan-level evidence that the pipeline's only
-  * shuffle (salted partials) is a small fraction of the scan, i.e. the
+  * timed region — the plan-level evidence that the pipeline's shuffles
+  * (salted partials, the routed write's range exchange) are a small
+  * fraction of the scan, i.e. the
   * job scales on scan parallelism, not on the interconnect. Shared by
   * ScalingBench and Bench (the official bench rows embed these bytes so
   * a timing anomaly can be told apart from a plan regression).
@@ -78,7 +79,7 @@ object ScalingBench {
     val lo = args.lift(1).map(_.toInt).getOrElse(8)
     val hi = args.lift(2).map(_.toInt).getOrElse(32)
     // optional 4th arg: which job to time over the corpus —
-    // "pipeline" (default: parse→enrich→route→aggregate),
+    // "pipeline" (default: Pipeline.runBatch, commit included),
     // "sft" (SftPrep.chatTemplate render, all columns forced), or
     // "sftprep" (token spans + truncation + preference pairs +
     // validation, all forced)
@@ -90,7 +91,7 @@ object ScalingBench {
     // scan from tmpfs) rather than generating rows inline — a real
     // 10^12-turn job scans storage. The corpus is written once, untimed.
     // Default layout is the conv-bucketed table (the Iceberg
-    // bucket(conv_id) stand-in — zero-shuffle aggregation); set
+    // bucket(conv_id) stand-in — shuffle-free aggregation); set
     // SPARK_GRAFT_LAYOUT=scattered to measure the naive random layout
     // (salted partial shuffle ≈ 69% of scanned bytes).
     val bucketed = !sys.env.get("SPARK_GRAFT_LAYOUT").contains("scattered")
@@ -109,11 +110,10 @@ object ScalingBench {
         def turns =
           if (bucketed) BucketedCorpus.open(spark, corpusDir, "graft_corpus")
           else spark.read.parquet(corpusDir)
-        val salt = Aggregate.saltFor(convClustered = bucketed)
         val job: () => (Double, Long) = stage match {
           case "sft"     => () => Bench.sftRunFrom(spark, turns)
           case "sftprep" => () => Bench.sftPrepRunFrom(spark, turns)
-          case _         => () => Bench.pipelineRunFrom(spark, turns, salt)
+          case _         => () => Bench.pipelineRunFrom(spark, turns, bucketed)
         }
         // full-size warmup: codegen + classloading outside the timed runs
         job()

@@ -38,10 +38,10 @@ object Aggregate {
     * shuffle skew to defuse and salting only multiplies the aggregate's
     * group cardinality (measured: ~1.7× extra scan from partials-cache
     * pressure, BASELINE.md round 2). Unclustered input shuffles → keep
-    * the skew defense.
+    * the skew defense, at `unclustered` ways (a topology's `salt`).
     */
-  def saltFor(convClustered: Boolean): Int =
-    if (convClustered) 1 else DefaultSalt
+  def saltFor(convClustered: Boolean, unclustered: Int = DefaultSalt): Int =
+    if (convClustered) 1 else unclustered
 
   /** Per-sink turn counts (batchprocessor-style counters, §2.5). */
   def sinkCounts(routed: DataFrame): DataFrame =
@@ -72,7 +72,9 @@ object Aggregate {
     convRollupFromPartials(salted(parsed, salt))
 
   /** Phase 1 with the sink in the key, so one frame feeds both
-    * [[sinkCountsFromPartials]] and [[convRollupFromPartials]].
+    * [[sinkCountsFromPartials]] and [[convRollupFromPartials]]. Only
+    * perfbench's traced replay aggregates this way; every run aggregates
+    * [[sinkCounts]] and [[convRollup]] over the routed frame.
     */
   def partials(routed: DataFrame, salt: Int = DefaultSalt): DataFrame =
     salted(routed, salt, col(Route.SinkCol))

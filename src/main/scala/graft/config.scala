@@ -49,17 +49,15 @@ final case class PipelineConfig(
 
 object PipelineConfig {
 
-  /** The coded defaults, as config (also serves as the reference example). */
-  val defaultJson: String =
-    """{
-      |  "grok_pattern": "tool=(?<tool_invoked>[A-Za-z0-9_]+) status=(?<status>[A-Za-z0-9]+) latency=(?<latency_ms>[0-9]+)ms",
-      |  "sample_pct": 100.0,
-      |  "salt": 16,
-      |  "sinks": [
-      |    {"name": "tool_search", "predicate": "tool_invoked IN ('search','browse','fetch')"},
-      |    {"name": "errors", "predicate": "err_code RLIKE '^E5'"}
-      |  ]
-      |}""".stripMargin
+  /** The default topology (FIXTURES.md §3): retrieval-tool turns,
+    * server-error turns, everything else, over [[Parse.DefaultPattern]].
+    * `configs/pipeline.json` writes the same value as JSON.
+    */
+  val default: PipelineConfig = PipelineConfig(
+    grokPattern = Parse.DefaultPattern,
+    sinks = Seq(
+      SinkConfig("tool_search", "tool_invoked IN ('search','browse','fetch')"),
+      SinkConfig("errors", "err_code RLIKE '^E5'")))
 
   /** Strict mapper: duplicate JSON keys are a config error, not
     * last-wins — Jackson's default silently keeps the last value, which
@@ -99,20 +97,11 @@ object PipelineConfig {
     ).validated
   }
 
-  /** Build the routed frame from config: (sample) → parse → enrich → route.
-    * The grok pattern must produce `tool_invoked`, `status`, `latency_ms`
-    * groups (the ParsedTurn contract).
-    */
+  /** [[Pipeline.transform]] with the static dimensions of `spark`. */
   def transform(spark: SparkSession, turns: DataFrame,
-                cfg: PipelineConfig): DataFrame = {
-    val sampled =
-      if (cfg.samplePct >= 100.0) turns
-      else Sampler.sampleConversations(turns, cfg.samplePct)
-    Route.assign(
-      Enrich.enrich(Parse.parseGrok(sampled, cfg.grokPattern),
-        TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF()),
-      cfg.sinkSpecs)
-  }
+                cfg: PipelineConfig): DataFrame =
+    Pipeline.transform(turns, TranscriptGen.roleDim(spark).toDF(),
+      TranscriptGen.toolDim(spark).toDF(), cfg)
 }
 
 /** Multi-pipeline service topology — the reference's `service:` block
@@ -180,8 +169,8 @@ object ServiceConfig {
                    checkpointRoot: String, svc: ServiceConfig)
       : Map[String, org.apache.spark.sql.streaming.StreamingQuery] =
     svc.pipelines.map { case (name, cfg) =>
-      name -> StreamingPipeline.startWithConfig(spark, inputDir,
-        s"$outDir/$name", s"$checkpointRoot/$name", cfg)
+      name -> StreamingPipeline.start(spark, inputDir,
+        s"$outDir/$name", s"$checkpointRoot/$name", cfg = cfg)
     }.toMap
 
   /** Shared-scan streaming fanout — the clone-once analog of [[runBatch]]
@@ -209,12 +198,7 @@ object ServiceConfig {
                          maxFilesPerTrigger: Int = 8)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import org.apache.spark.sql.streaming.Trigger
-    val stream = spark.readStream
-      .schema(Schemas.turn)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputDir)
-      .withWatermark("ts", "10 minutes")
-    stream.writeStream
+    StreamingPipeline.source(spark, inputDir, maxFilesPerTrigger, None).writeStream
       .option("checkpointLocation", checkpointDir)
       .trigger(Trigger.ProcessingTime(triggerMs))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>

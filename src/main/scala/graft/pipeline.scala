@@ -2,10 +2,12 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** End-to-end batch pipeline: parse → enrich → route → aggregate
+/** End-to-end batch pipeline: parse → enrich → route → aggregate → commit
   * (SURVEY.md §3.2 Spark analog). parse/enrich/route are narrow
   * transformations fused by whole-stage codegen (broadcast joins are
-  * narrow); the only shuffles are the two aggregates.
+  * narrow). The shuffles are the two aggregates and the routed write's
+  * range exchange ([[Route.writePartitioned]]). Every run, batch or
+  * streaming, takes its topology from one [[PipelineConfig]].
   */
 final case class PipelineResult(
     routed: DataFrame,
@@ -28,36 +30,43 @@ object Pipeline {
       .config(NioLocalFileSystem.SessionConf)
       .getOrCreate()
 
-  /** Pure transform portion (no writes) — shared by batch and streaming. */
+  /** The routed frame of topology `cfg`: (sample) → parse → enrich →
+    * route, with no writes. Every batch, streaming and service run builds
+    * its routed rows here.
+    */
   def transform(turns: DataFrame, roleDim: DataFrame, toolDim: DataFrame,
-                sinks: Seq[SinkSpec] = Route.defaultSinks): DataFrame =
-    Route.assign(Enrich.enrich(Parse.parseGrok(turns), roleDim, toolDim), sinks)
+                cfg: PipelineConfig = PipelineConfig.default): DataFrame = {
+    val sampled =
+      if (cfg.samplePct >= 100.0) turns
+      else Sampler.sampleConversations(turns, cfg.samplePct)
+    Route.assign(
+      Enrich.enrich(Parse.parseGrok(sampled, cfg.grokPattern), roleDim, toolDim),
+      cfg.sinkSpecs)
+  }
 
   /** Full batch run with fanout write + aggregates + lineage.
     * The routed frame is persisted once (cloningfanout analog) because four
     * consumers read it: the partitioned write, both aggregates and the
     * lineage. The four writes run concurrently ([[Commit.all]]); the frame
     * is unpersisted only after every write has ended.
+    *
+    * `config`: the topology; `None` means [[PipelineConfig.default]].
     * `convClustered`: pass true when `turns` comes from a conv-bucketed
-    * scan ([[BucketedCorpus.open]]) — selects [[Aggregate.saltFor]]'s
-    * shuffle-free salt.
+    * scan ([[BucketedCorpus.open]]). The rollup's salt follows
+    * [[Aggregate.saltFor]] on every topology: 1 on conv-clustered input,
+    * else the config's `salt`.
     */
   def runBatch(spark: SparkSession, turns: DataFrame, outDir: String,
-               sinks: Seq[SinkSpec] = Route.defaultSinks,
                obs: Option[ObsMetrics] = None,
                batchId: Long = 0L,
                config: Option[PipelineConfig] = None,
                convClustered: Boolean = false): PipelineResult = {
-    val roleDim = TranscriptGen.roleDim(spark).toDF()
-    val toolDim = TranscriptGen.toolDim(spark).toDF()
-    val routed = config
-      .map(c => PipelineConfig.transform(spark, turns, c))
-      .getOrElse(transform(turns, roleDim, toolDim, sinks))
-      .persist()
+    val cfg = config.getOrElse(PipelineConfig.default)
+    val routed = PipelineConfig.transform(spark, turns, cfg).persist()
     try {
       val counts = Aggregate.sinkCounts(routed)
       val rollup = Aggregate.convRollup(routed,
-        salt = config.fold(Aggregate.saltFor(convClustered))(_.salt))
+        salt = Aggregate.saltFor(convClustered, cfg.salt))
       var n = 0L
       Commit.all(
         () => Route.writePartitioned(routed, s"$outDir/routed"),

@@ -44,14 +44,6 @@ object Route {
     df.withColumn(SinkCol, expr)
   }
 
-  /** Default sink topology for the transcript pipeline (FIXTURES.md §3):
-    * retrieval-tool turns, server-error turns, everything else.
-    */
-  def defaultSinks: Seq[SinkSpec] = Seq(
-    SinkSpec("tool_search", col("tool_invoked").isin("search", "browse", "fetch")),
-    SinkSpec("errors", col("err_code").rlike("^E5"))
-  )
-
   /** Single-pass partitioned fanout write. Keyed by
     * sink/tool/role per the north rule ("per-sink tables keyed by tool and
     * role"). Each file is sorted by `(conv_id, turn_idx)`, which gives

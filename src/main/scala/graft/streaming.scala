@@ -16,38 +16,30 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * Spark analog of queued_retry's at-least-once + dedup-by-idempotence.
   *
   * The batchprocessor analog (§2.5): `Trigger.ProcessingTime` is the timeout
-  * flush; `maxFilesPerTrigger` is the size flush.
+  * flush, `maxFilesPerTrigger` the count flush and `maxBytesPerTrigger` the
+  * size flush.
   */
 object StreamingPipeline {
 
+  /** Stream the parquet files of `inputDir` through topology `cfg` and
+    * commit each micro-batch ([[commitMicroBatch]]). `cfg` defaults to
+    * [[PipelineConfig.default]]; the stream takes the same
+    * [[Pipeline.transform]] as a batch run of `cfg`, so it routes
+    * identically.
+    */
   def start(spark: SparkSession, inputDir: String, outDir: String,
             checkpointDir: String,
-            sinks: Seq[SinkSpec] = Route.defaultSinks,
+            cfg: PipelineConfig = PipelineConfig.default,
             triggerMs: Long = 200L,
             maxFilesPerTrigger: Int = 8,
             maxBytesPerTrigger: Option[Long] = None,
             obs: Option[ObsMetrics] = None): StreamingQuery = {
-    val roleDim = TranscriptGen.roleDim(spark).toDF()
-    val toolDim = TranscriptGen.toolDim(spark).toDF()
-
-    // batchprocessor flush triad (§2.5): ProcessingTime = timeout flush,
-    // maxFilesPerTrigger = count flush, maxBytesPerTrigger = size flush.
-    // Spark rejects count+size set together (FileStreamOptions), exactly
-    // like the reference's send_batch_size vs send_batch_max_size split —
-    // a size flush replaces the count flush.
-    val reader = spark.readStream.schema(Schemas.turn)
-    maxBytesPerTrigger match {
-      case Some(b) => reader.option("maxBytesPerTrigger", b)
-      case None    => reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
-    }
-    val stream = reader
-      .parquet(inputDir)
-      .withWatermark("ts", "10 minutes")
-
     // observe tag → per-micro-batch rows/null-keys on every
     // StreamingQueryProgress (harvested by ObsStreamingListener)
     val routed = Obs.observed(
-      Pipeline.transform(stream, roleDim, toolDim, sinks), "stream_route")
+      PipelineConfig.transform(spark,
+        source(spark, inputDir, maxFilesPerTrigger, maxBytesPerTrigger), cfg),
+      "stream_route")
 
     routed.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -58,13 +50,32 @@ object StreamingPipeline {
       .start()
   }
 
-  /** One micro-batch's commit, shared by [[start]], [[startWithConfig]] and
+  /** The watermarked turn stream over `inputDir`, shared by [[start]] and
+    * [[ServiceConfig.startStreamsShared]]. Spark rejects the count and size
+    * flushes set together (FileStreamOptions), exactly like the reference's
+    * send_batch_size vs send_batch_max_size split — a size flush replaces
+    * the count flush.
+    */
+  private[graft] def source(spark: SparkSession, inputDir: String,
+                            maxFilesPerTrigger: Int,
+                            maxBytesPerTrigger: Option[Long]): DataFrame = {
+    val reader = spark.readStream.schema(Schemas.turn)
+    maxBytesPerTrigger match {
+      case Some(b) => reader.option("maxBytesPerTrigger", b)
+      case None    => reader.option("maxFilesPerTrigger", maxFilesPerTrigger)
+    }
+    reader.parquet(inputDir).withWatermark("ts", "10 minutes")
+  }
+
+  /** One micro-batch's commit, shared by [[start]] and
     * [[ServiceConfig.startStreamsShared]]:
     * the routed rows, the per-sink counts and the lineage, written
     * concurrently ([[Commit.all]]) from the batch persisted once.
     * Idempotent: every output goes to a deterministic `batch_id=<id>`
     * directory with mode("overwrite"), so a replayed batch rewrites the
-    * same bytes.
+    * same bytes. Kept apart from `Pipeline.runBatch`'s commit on purpose:
+    * the layouts differ (`batch_id=N` directories, a `batch_id` column on
+    * a one-file `sink_counts`, no `conv_rollup`).
     */
   private[graft] def commitMicroBatch(batch: DataFrame, batchId: Long, outDir: String,
                                       obs: Option[ObsMetrics]): Unit = {
@@ -81,35 +92,6 @@ object StreamingPipeline {
         () => sent = Obs.writeLineage(cached, batchId, "route", outDir))
       obs.foreach(_.sent("route").add(sent))
     } finally { cached.unpersist() }
-  }
-
-  /** Config-driven streaming topology — the streaming twin of
-    * `Pipeline.runBatch(config=…)`: grok pattern, sampling, and sink
-    * predicates come from [[PipelineConfig]] JSON (the reference's
-    * YAML-driven service startup, SURVEY.md §3.1). All config-compiled
-    * stages are narrow/broadcast, so the streaming plan is identical in
-    * shape to the coded one. Commits like [[start]]: routed rows, per-sink
-    * counts and lineage per micro-batch, and the same `stream_route`
-    * observe tag for [[ObsStreamingListener]].
-    */
-  def startWithConfig(spark: SparkSession, inputDir: String, outDir: String,
-                      checkpointDir: String, cfg: PipelineConfig,
-                      triggerMs: Long = 200L,
-                      maxFilesPerTrigger: Int = 8,
-                      obs: Option[ObsMetrics] = None): StreamingQuery = {
-    val stream = spark.readStream
-      .schema(Schemas.turn)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .parquet(inputDir)
-      .withWatermark("ts", "10 minutes")
-    val routed = Obs.observed(PipelineConfig.transform(spark, stream, cfg), "stream_route")
-    routed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(triggerMs))
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        commitMicroBatch(batch, batchId, outDir, obs)
-      }
-      .start()
   }
 
   /** Batch-mode count-flush analog (batchprocessor `send_batch_size`,
@@ -148,15 +130,11 @@ object StreamingPipeline {
   def startWindowedCounts(spark: SparkSession, inputDir: String,
                           outDir: String, checkpointDir: String,
                           watermark: String = "10 minutes",
-                          windowLen: String = "1 hour",
-                          sinks: Seq[SinkSpec] = Route.defaultSinks): StreamingQuery = {
-    val roleDim = TranscriptGen.roleDim(spark).toDF()
-    val toolDim = TranscriptGen.toolDim(spark).toDF()
-    val routed = Pipeline.transform(
-      spark.readStream.schema(Schemas.turn).parquet(inputDir)
-        .withWatermark("ts", watermark),
-      roleDim, toolDim, sinks)
-    routed
+                          windowLen: String = "1 hour"): StreamingQuery =
+    PipelineConfig.transform(spark,
+        spark.readStream.schema(Schemas.turn).parquet(inputDir)
+          .withWatermark("ts", watermark),
+        PipelineConfig.default)
       .groupBy(window(col("ts"), windowLen), col(Route.SinkCol))
       .agg(count(lit(1)).as("n_turns"),
         sum(col("latency_ms")).as("sum_latency_ms"))
@@ -168,5 +146,4 @@ object StreamingPipeline {
       .format("parquet")
       .option("path", s"$outDir/windowed_counts")
       .start()
-  }
 }

@@ -16,7 +16,7 @@ class AggregateSpec extends SparkTestBase {
 
   test("one-pass partials path ≡ direct aggregates") {
     val turns = TranscriptGen.turns(spark, 400, seed = 42).drop("_truth")
-    val routed = Route.assign(Parse.parseGrok(turns), Route.defaultSinks)
+    val routed = Route.assign(Parse.parseGrok(turns), PipelineConfig.default.sinkSpecs)
     val partials = Aggregate.partials(routed).cache()
     val counts = Aggregate.sinkCountsFromPartials(partials)
     val rollup = Aggregate.convRollupFromPartials(partials)

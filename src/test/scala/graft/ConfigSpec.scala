@@ -1,27 +1,32 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-/** Config-driven topology (SURVEY.md §3.1 analog): JSON config must build
-  * the same pipeline as the coded defaults, and invalid configs must be
-  * rejected at load time (the reference's config validation pass).
+/** Config-driven topology (SURVEY.md §3.1 analog): the shipped JSON
+  * configs must load as the topology they stand for, and invalid configs
+  * must be rejected at load time (the reference's config validation pass).
   */
 class ConfigSpec extends SparkTestBase {
 
+  private def shipped(name: String): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get("configs", name)), "UTF-8")
+
   test("default JSON config reproduces the coded pipeline exactly") {
-    val cfg = PipelineConfig.fromJson(PipelineConfig.defaultJson)
-    val turns = TranscriptGen.turns(spark, 300, seed = 42).drop("_truth")
-    val fromCfg = PipelineConfig.transform(spark, turns, cfg)
-      .select("conv_id", "turn_idx", "text", Route.SinkCol)
-    val coded = Pipeline.transform(turns,
-        TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
-      .select("conv_id", "turn_idx", "text", Route.SinkCol)
-    assert(fromCfg.exceptAll(coded).isEmpty && coded.exceptAll(fromCfg).isEmpty)
+    assert(PipelineConfig.fromJson(shipped("pipeline.json")) === PipelineConfig.default)
+  }
+
+  test("shipped service config parses and validates with its two pipelines") {
+    val json = shipped("service.json")
+    assert(ServiceConfig.detect(json))
+    val svc = ServiceConfig.fromJson(json)
+    assert(svc.pipelines.map(_._1) === Seq("full", "sampled_10pct"))
+    val byName = svc.pipelines.toMap
+    assert(byName("full") === PipelineConfig.default)
+    assert(byName("sampled_10pct") === PipelineConfig.default.copy(
+      samplePct = 10.0, sinks = Seq(SinkConfig("tools", "tool_invoked <> 'none'"))))
   }
 
   test("config sampling applies conversation-atomic sampling") {
-    val cfg = PipelineConfig.fromJson(PipelineConfig.defaultJson)
-      .copy(samplePct = 20.0)
+    val cfg = PipelineConfig.default.copy(samplePct = 20.0)
     val turns = TranscriptGen.turns(spark, 300, seed = 42).drop("_truth")
     val routed = PipelineConfig.transform(spark, turns, cfg)
     assert(routed.count() ===

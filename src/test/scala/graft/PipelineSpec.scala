@@ -48,7 +48,7 @@ class PipelineSpec extends SparkTestBase {
       ("c2", 0, "assistant", "tool=search status=OK latency=5ms", "search", ts),
       ("c2", 1, "assistant", "tool=my_tool status=OK latency=7ms", "my_tool", ts))
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val cfg = PipelineConfig.fromJson(PipelineConfig.defaultJson)
+    val cfg = PipelineConfig.default
     Seq("default" -> None, "config" -> Some(cfg)).foreach { case (name, config) =>
       val res = Pipeline.runBatch(spark, turns, tmpDir(s"pipe-miss-$name"),
         config = config)

@@ -83,7 +83,7 @@ class PlanSpec extends SparkTestBase {
 
   test("salted aggregation has map-side partial aggregation") {
     val turns = TranscriptGen.turns(spark, 100, seed = 42).drop("_truth")
-    val routed = Route.assign(Parse.parseGrok(turns), Route.defaultSinks)
+    val routed = Route.assign(Parse.parseGrok(turns), PipelineConfig.default.sinkSpecs)
     // partial + final HashAggregate pair around each exchange, and no
     // ObjectHashAggregate (tool-keyed groups keep aggregation fixed-width)
     Seq(Aggregate.partials(routed), Aggregate.convRollup(routed)).foreach { df =>

@@ -170,8 +170,8 @@ class Round2Spec extends SparkTestBase {
     val ckpt = tmpDir("cfg-stream-ckpt")
     val turns = TranscriptGen.turnsDs(spark, 100).toDF()
     turns.repartition(3).write.mode("append").parquet(inDir)
-    val cfg = PipelineConfig.fromJson(PipelineConfig.defaultJson)
-    val q = StreamingPipeline.startWithConfig(spark, inDir, outDir, ckpt, cfg)
+    val cfg = PipelineConfig.default
+    val q = StreamingPipeline.start(spark, inDir, outDir, ckpt, cfg = cfg)
     q.processAllAvailable()
     q.stop()
     val streamed = spark.read.option("basePath", s"$outDir/routed")

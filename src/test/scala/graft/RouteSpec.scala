@@ -34,7 +34,7 @@ class RouteSpec extends SparkTestBase {
     val turns = TranscriptGen.turns(spark, 400, seed = 42).drop("_truth")
     val parsed = Enrich.enrich(Parse.parseGrok(turns),
       TranscriptGen.roleDim(spark).toDF(), TranscriptGen.toolDim(spark).toDF())
-    val routed = Route.assign(parsed, Route.defaultSinks)
+    val routed = Route.assign(parsed, PipelineConfig.default.sinkSpecs)
     val counts = Aggregate.sinkCounts(routed).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val nSearch = parsed.where(col("tool_invoked").isin("search", "browse", "fetch")).count()

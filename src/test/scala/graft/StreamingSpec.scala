@@ -67,8 +67,8 @@ class StreamingSpec extends SparkTestBase {
     spark.streams.addListener(listener)
     val n = turns.count()
     try {
-      val q = StreamingPipeline.startWithConfig(spark, inputDir, outDir, ckptDir,
-        PipelineConfig.fromJson(PipelineConfig.defaultJson),
+      val q = StreamingPipeline.start(spark, inputDir, outDir, ckptDir,
+        cfg = PipelineConfig.default,
         maxFilesPerTrigger = 2, obs = Some(obs))
       q.processAllAvailable()
       q.stop()
