@@ -259,9 +259,9 @@ object CurationScalingBench {
         // fetch-permission decision over the full corpus: same URL
         // synthesis as the url stage (odd site modulus, the every-7th
         // mega-host), robots bodies per HOST in 3 variants — two
-        // literal-rule files (the startsWith codegen fast path, the
-        // real-world majority) and one wildcard/$ file (the per-row
-        // regex path). Host count scales with the corpus at the real
+        // literal-rule files (the kernel's startsWith probes, the
+        // real-world majority) and one wildcard/$ file (its regex
+        // path). Host count scales with the corpus at the real
         // web's ~250 docs/host ratio by default; SPARK_GRAFT_ROBOTS_HOSTS
         // pins it (the decomposition knob).
         object robotsFix {
@@ -286,9 +286,9 @@ object CurationScalingBench {
           def urls = docs.select(id, concat(
             lit("https://"), when(id % 3 === 0, "www.").otherwise(""),
             lit("site"), site.cast("string"), tld, path).as("url"),
-            // the precomputed-seam columns (robots_pre): host/path by
-            // ARITHMETIC — what a pipeline that already ran the URL
-            // stage carries, vs re-deriving the regex chains per row
+            // robots_pre's columns: host/path by ARITHMETIC — what a
+            // pipeline that already ran the URL stage carries, vs
+            // re-deriving the regex chains per row
             concat(lit("site"), site.cast("string"), tld).as("host_pre"),
             path.as("path_pre"))
           def hosts = spark.range(nSites).select(concat(lit("site"),
@@ -309,16 +309,7 @@ object CurationScalingBench {
           // ONCE per job, then applies the table to the 100 TB corpus.
           // lazy ⇒ built on the warmup call, outside every timed region
           // (the BpeEncode trained-merge-list precedent).
-          lazy val table: graft.expr.RobotsDecide.Table =
-            graft.expr.RobotsDecide.buildTable(
-              graft.ops.RobotsTxt.effectiveRules(rules, "graftbot")
-                // rule-less groups surface as null-pattern marker rows
-                // (isAllowedFast filters them the same way) — buildTable
-                // would NPE on them
-                .where(col("pattern").isNotNull)
-                .select("host", "pattern", "allow").collect()
-                .map(r => (r.getString(0), r.getString(1), r.getBoolean(2)))
-                .toSeq)
+          lazy val table = graft.ops.RobotsTxt.ruleTable(rules, "graftbot")
         }
         def robotsCheck(out: DataFrame): Unit = {
           val chk = out.agg(count(lit(1)).as("n"),
@@ -327,14 +318,11 @@ object CurationScalingBench {
           require(chk.getLong(1) > 0 && chk.getLong(1) < nDocs,
             s"robots: decision did not bind (${chk.getLong(1)} of $nDocs)")
         }
-        def robotsRun(fast: Boolean = false): Unit =
-          // e2e variants: parse + agent selection + derivation + decision
-          // per call — what a one-shot compliance audit pays
-          robotsCheck(
-            if (fast) graft.ops.RobotsTxt.isAllowedFast(robotsFix.urls,
-              "url", robotsFix.rules, "graftbot")
-            else graft.ops.RobotsTxt.isAllowed(robotsFix.urls, "url",
-              robotsFix.rules, "graftbot"))
+        def robotsRun(): Unit =
+          // e2e: parse + agent selection + derivation + decision per
+          // call — what a one-shot compliance audit pays
+          robotsCheck(graft.ops.RobotsTxt.isAllowed(robotsFix.urls, "url",
+            robotsFix.rules, "graftbot"))
         def robotsPreRun(): Unit =
           // steady state: prepared rule table + precomputed host/path —
           // the corpus-proportional work ONLY (scan → one codegen'd
@@ -513,10 +501,7 @@ object CurationScalingBench {
         // calm-window length this box's protocol depends on
         // degenerate hot-bucket cap stress (opt-in): 5/6 of the rows in
         // ONE bucket — the population the cap exists to defuse. The
-        // sort-free threshold cap must finish with bounded per-task work;
-        // capstress_window replays the retired row_number shape for the
-        // A/B (it funnels the hot bucket into a single sorting task, so
-        // its wall is flat in cores — the measured reason it was retired).
+        // sort-free threshold cap must finish with bounded per-task work.
         val nCap = sys.env.get("SPARK_GRAFT_CAPSTRESS_ROWS").map(_.toLong)
           .getOrElse(12000000L)
         def capDf = spark.range(nCap).select(
@@ -535,12 +520,6 @@ object CurationScalingBench {
         def capstressRun(): Unit =
           capCheck(graft.ops.Dedup.capBucketsBy(
             capDf, Seq("bucket"), "rid", 2048, None))
-        def capstressWindowRun(): Unit = {
-          import org.apache.spark.sql.expressions.Window
-          capCheck(capDf.withColumn("_bn", row_number().over(
-              Window.partitionBy(col("bucket")).orderBy(col("rid"))))
-            .where(col("_bn") <= 2048).drop("_bn"))
-        }
         def capstressShuffleRun(): Unit = {
           // bandwidth control: the SAME rows through a uniform-key
           // exchange with no cap logic at all — isolates the box's
@@ -564,12 +543,6 @@ object CurationScalingBench {
           "classifier" -> (() => classifierRun()),
           "url" -> (() => urlRun()),
           "robots" -> (() => robotsRun()),
-          "robots_fast" -> (() => robotsRun(fast = true)),
-          // the size-routed single entry point (kernel ≤ 10^5 hosts,
-          // relational above — the measured cache-ceiling cut line)
-          "robots_auto" -> (() => robotsCheck(
-            graft.ops.RobotsTxt.isAllowedAuto(robotsFix.urls, "url",
-              robotsFix.rules, "graftbot"))),
           "robots_pre" -> (() => robotsPreRun()),
           "pagerank" -> (() => pagerankRun()),
           "crawl" -> (() => crawlRun()),
@@ -577,7 +550,6 @@ object CurationScalingBench {
           "hotngrams" -> (() => hotNgramsRun()),
           "hotngrams_exact" -> (() => hotNgramsExactRun()),
           "capstress" -> (() => capstressRun()),
-          "capstress_window" -> (() => capstressWindowRun()),
           "capstress_shuffle" -> (() => capstressShuffleRun()))
           .filter { case (name, _) =>
             if (stageSet.isEmpty) default(name) else stageSet(name) }

@@ -1089,10 +1089,11 @@ object SparkEntry {
     }),
 
     // robots.txt fetch-permission decision for agent "graftbot": agent
-    // selection (specific group beats *), pattern→regex translation
-    // (escape chain shared verbatim with the oracle), longest-match with
-    // Allow tie-break, default allow — the corpus side is one broadcast
-    // join + per-row array fold (zero corpus shuffle, RobotsTxtSpec).
+    // selection (specific group beats *), longest-match with Allow
+    // tie-break, default allow — the collected rule table drives the
+    // codegen'd RobotsDecide kernel, so the corpus side is scan → one
+    // projection (no join, no shuffle; RobotsTxtSpec). The oracle
+    // replays the decision with its own pattern→regex escape chain.
     "q_robots_allowed" -> ((s, d) => {
       val u = urlDocs(t(s, d, "documents"))
       val hosts = u.select(
@@ -1109,12 +1110,11 @@ object SparkEntry {
     // profiles trained on the every-3rd-doc labeled seed, every doc
     // classified by exact integer NLL argmin. The oracle recomputes ALL
     // counts/totals/vocab in SQL and imports only the two quantized-ln
-    // columns, cross-checked by joins ON the counts.
-    // (the one-pass LangIdScore kernel — bit-equal to the relational
-    // formulation the oracle replays; TextAnalysisSpec parity)
+    // columns, cross-checked by joins ON the counts. The engine scores
+    // every doc in one pass of the codegen'd LangIdScore kernel.
     "q_langid_ngram" -> ((s, d) => {
       val docs = t(s, d, "documents")
-      graft.ops.TextAnalysis.langIdNgramFast(docs, "doc_id", "text",
+      graft.ops.TextAnalysis.langIdNgram(docs, "doc_id", "text",
         docs.where(col("doc_id") % 3 === 0), "lang")
     }),
 
@@ -3404,7 +3404,8 @@ object SparkEntry {
       "SELECT host, agent, allow, pattern FROM rules " +
       "WHERE pattern IS NOT NULL"),
 
-    // agent selection + pattern→regex translation (same escape chain) +
+    // agent selection + pattern→regex translation (an escape chain of
+    // its own; the engine's kernel quotes literal segments) +
     // longest-match/Allow-tie decision replayed; default allow on both
     // the no-robots and no-matching-rule arms
     "q_robots_allowed" ->

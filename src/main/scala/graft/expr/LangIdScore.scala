@@ -7,24 +7,21 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** One-pass language-ID scoring kernel — the scale path of
-  * [[graft.ops.TextAnalysis.langIdNgram]] (kept as the relational
-  * cross-check and the oracle formulation). The relational shape explodes
-  * ~|text| gram rows per document, probes the broadcast dictionary per
-  * (gram, lang) hit, and aggregates (doc, lang) partials — measured 7.1 s
-  * for 50k docs at sf0.1 (the round's slowest bench row). Here the whole
-  * trained dictionary — gram → per-language delta vector, plus the
-  * per-language floors — rides as a reference object (the
-  * [[BpeEncode]]/[[RobotsDecide]] pattern) and every document is scored
-  * in ONE pass: iterate code points, probe the hash map per gram,
-  * accumulate L exact long sums, argmin with the (nll, lang) tie-break.
-  * No explode, no join, no aggregation — zero shuffle at any corpus
-  * size, and bit-equal to the relational path (TextAnalysisSpec).
+/** One-pass language-ID scoring kernel — the scorer behind
+  * [[graft.ops.TextAnalysis.langIdNgram]]. The whole trained dictionary —
+  * gram → per-language delta vector, plus the per-language floors —
+  * rides as a reference object (the [[BpeEncode]]/[[RobotsDecide]]
+  * pattern) and every document is scored in ONE pass: iterate code
+  * points, probe the hash map per gram, accumulate L exact long sums,
+  * argmin with the (nll, lang) tie-break. No explode, no join, no
+  * aggregation — zero shuffle at any corpus size. TextAnalysisSpec
+  * checks it against a driver replay of the NB formulation; the
+  * q_langid_ngram oracle replays it in SQL.
   *
   * Grams are built over CODE POINTS (`new String(cps, i, n)`), matching
-  * Spark's code-point `substring`/`length` semantics the relational
-  * formulation and the SQL oracle use — a UTF-16 `String.substring`
-  * would diverge on supplementary-plane text.
+  * the code-point `substring`/`length` semantics of the seed's
+  * [[graft.ops.TextAnalysis.charNgrams]] and of the SQL oracle — a UTF-16
+  * `String.substring` would diverge on supplementary-plane text.
   *
   * Returns `struct<pred_lang:string, nll_micro:long, n_grams:long>`;
   * documents with fewer than `n` code points yield (null, null, 0).
@@ -79,11 +76,11 @@ object LangIdScore {
       "langs must be strictly ascending in UTF8String (byte) order")
   }
 
-  /** The relational path's `min(struct(nll, lang))` tie-break orders lang
-    * by UTF8String BYTE order, which diverges from Java UTF-16 String
-    * order for code points >= U+E000 vs supplementary-plane chars — so
-    * the kernel's first-strict-min scan must index langs in the same
-    * byte order, not `String.<`.
+  /** The lang tie-break orders by UTF8String BYTE order (Spark's string
+    * ordering), which diverges from Java UTF-16 String order for code
+    * points >= U+E000 vs supplementary-plane chars — so the kernel's
+    * first-strict-min scan must index langs in byte order, not
+    * `String.<`.
     */
   private def utf8Lt(a: String, b: String): Boolean =
     UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0

@@ -165,8 +165,9 @@ object Dedup {
   /** Candidate pairs via banded LSH over minhash signatures.
     * Output: (id_a, id_b, jaccard_est) with id_a < id_b, distinct.
     *
-    * Cache lifecycle: the signature frame is `localCheckpoint(eager)`ed —
-    * computed once, read by both self-join sides, and its blocks are
+    * Cache lifecycle: [[minhashCandidatesFromSig]] `localCheckpoint(eager)`s
+    * the signature frame — computed once, read by both self-join sides
+    * and both estimate joins, and its blocks are
     * released by the ContextCleaner when the result frame is dropped
     * (plain `persist` would pin blocks in the CacheManager until an
     * explicit unpersist, leaking across calls in a long-lived session).
@@ -180,8 +181,7 @@ object Dedup {
                         obsTag: Option[String] = None): DataFrame =
     minhashCandidatesFromSig(
       df.select(col(idCol).as("id"),
-          minhashSignature(wordShingles(col(textCol), shingleK), numHashes).as("sig"))
-        .localCheckpoint(true),
+        minhashSignature(wordShingles(col(textCol), shingleK), numHashes).as("sig")),
       numHashes, bands, bucketCap, obsTag)
 
   /** LSH band array of a minhash signature column:
@@ -277,9 +277,10 @@ object Dedup {
     capBucketsBy(banded, Seq("band_idx", "band_hash"), idCol, bucketCap,
       obsTag)
 
-  /** Candidates from a precomputed/persisted `(id, sig)` frame — at real
-    * scale the signature frame is a durable index table reused across
-    * dedup runs; the caller owns its lifecycle.
+  /** Candidates from an `(id, sig)` frame — at real scale the signature
+    * frame is a durable index table reused across dedup runs. This
+    * function owns the one checkpoint of the frame it is given, so
+    * callers pass the signature frame unmaterialized.
     *
     * WIRE SHAPE (the 10M-doc scale row's finding): the banded self-join
     * ships ONLY (id, band_idx, band_hash) — the numHashes-long signature
@@ -360,7 +361,7 @@ object Dedup {
       .localCheckpoint(true)
     val sig = shh.select(col("id"),
       graft.expr.MinHashSigFromHashes.minhash_sig_hashed(col("shh"), numHashes)
-        .as("sig")).localCheckpoint(true)
+        .as("sig"))
     val cands = minhashCandidatesFromSig(sig, numHashes, bands, bucketCap)
     cands
       .join(shh.select(col("id").as("id_a"), col("shh").as("sh_a")), "id_a")

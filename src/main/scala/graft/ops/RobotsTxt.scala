@@ -1,5 +1,7 @@
 package graft.ops
 
+import graft.expr.RobotsDecide
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -11,27 +13,20 @@ import org.apache.spark.sql.functions._
   * be able to answer "was this URL even allowed to be fetched?" corpus-
   * wide, after the fact.
   *
-  * Everything here is relational — parse, group formation, agent
-  * selection, and longest-match evaluation are all Columns, no UDFs.
-  *
   * Scale shapes (100 TB corpus, host-scale robots set):
-  *  - [[parseRules]]: the per-host line windows (group formation needs
-  *    line order) partition by HOST over the robots frame — a frame whose
-  *    size is the number of hosts, not documents, and whose per-partition
-  *    work is bounded by the 500 KiB robots.txt size cap crawlers apply
-  *    (RFC 9309 §2.4). The corpus never enters this stage.
-  *  - [[isAllowed]]: the corpus side never shuffles. Effective rules
-  *    collapse to ONE row per host (`collect_list` into an array —
-  *    bounded by the same 500 KiB cap), broadcast, and evaluated per row
-  *    with array HOFs: filter candidates by prefix/pattern match, fold to
-  *    the longest-match winner. One BroadcastHashJoin, zero exchanges on
-  *    the 100 TB side (plan-gated in RobotsTxtSpec).
-  *  - Literal rules (no `*`, no trailing `$`) — the overwhelming majority
-  *    in real robots files — match via `startsWith`, staying in codegen.
-  *    Only wildcard rules pay the regex path (the pattern is per-RULE
-  *    data, so Spark compiles it at eval time; the rules array per host
-  *    is tens of entries, and the literal fast path keeps the compile off
-  *    the common case).
+  *  - [[parseRules]]: relational, no UDFs. The per-host line windows
+  *    (group formation needs line order) partition by HOST over the
+  *    robots frame — a frame whose size is the number of hosts, not
+  *    documents, and whose per-partition work is bounded by the 500 KiB
+  *    robots.txt size cap crawlers apply (RFC 9309 §2.4). The corpus
+  *    never enters this stage.
+  *  - [[isAllowed]]: the effective rules for one agent collect to the
+  *    driver ([[ruleTable]], host-scale) and are broadcast to ONE
+  *    codegen'd kernel ([[graft.expr.RobotsDecide]]):
+  *    literal rules (no `*`, no trailing `$` — the real-world majority)
+  *    are raw `startsWith` probes, wildcard rules compile their regex
+  *    once per JVM. The corpus plan is scan → one projection: no join,
+  *    no exchange (plan-gated in RobotsTxtSpec).
   *
   * Semantics implemented (RFC 9309 + the Google parser's documented
   * choices, which the RFC blessed):
@@ -120,21 +115,6 @@ object RobotsTxt {
       .drop("_rb_spec_agent", "_rb_has_spec")
   }
 
-  /** Regex translation of a robots pattern: escape RE2/Java specials,
-    * `*` → `.*`, trailing `$` → end anchor, anchored at the path start.
-    * Shared by engine and oracle verbatim (same two regexp_replace
-    * steps), so the translation itself is replay-checked.
-    */
-  private[ops] def patternRegex(pat: Column): Column = {
-    val esc = regexp_replace(pat, """([\\.\[\]{}()+?^$|*])""", """\\$1""")
-    val star = regexp_replace(esc, """\\\*""", ".*")
-    // trailing "\$" (2 escaped chars) becomes the real end anchor
-    val anchored = when(pat.endsWith("$"),
-      concat(star.substr(lit(1), length(star) - 2), lit("$")))
-      .otherwise(star)
-    concat(lit("^"), anchored)
-  }
-
   /** The match target: path + query of the RAW url (case preserved —
     * robots paths are case-sensitive), fragment stripped, empty → "/".
     */
@@ -146,128 +126,31 @@ object RobotsTxt {
     when(noFrag === "", "/").otherwise(noFrag)
   }
 
+  /** The effective rule table `agent` is decided against, compiled for
+    * [[graft.expr.RobotsDecide]] and broadcast. Agent selection runs on
+    * the FULL frame (rule-less marker rows must count); the markers
+    * themselves match nothing and are dropped before the collect.
+    * Host-scale: the table lives on the heap (~100 B/rule) — fine
+    * through ~10^6 hosts.
+    */
+  def ruleTable(rules: DataFrame,
+                agent: String): Broadcast[RobotsDecide.Table] =
+    rules.sparkSession.sparkContext.broadcast(RobotsDecide.buildTable(
+      effectiveRules(rules, agent)
+        .where(col("pattern").isNotNull)
+        .select("host", "pattern", "allow").collect()
+        .map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSeq))
+
   /** Decide fetch permission for every URL: adds `allowed: boolean`.
     * `rules` is [[parseRules]] output (any agents); the decision is for
-    * `agent`. The corpus side never shuffles: effective rules collapse
-    * to one array row per host and broadcast (plan-gated).
+    * `agent`. A URL with no host (NULL or empty) has no robots file and
+    * is allowed.
     */
   def isAllowed(urls: DataFrame, urlCol: String, rules: DataFrame,
-                agent: String,
-                precomputedHost: Option[String] = None,
-                precomputedPath: Option[String] = None): DataFrame = {
+                agent: String): DataFrame = {
     require(urls.columns.contains(urlCol), s"missing column: $urlCol")
-    Seq("_rb_host", "_rb_rules", "_rb_win", "_rb_path").foreach(c => require(
-      !urls.columns.contains(c), s"input may not contain internal column $c"))
-    (precomputedHost.toSeq ++ precomputedPath).foreach(c => require(
-      urls.columns.contains(c), s"missing precomputed column: $c"))
-    // agent selection runs on the FULL frame (rule-less marker rows must
-    // count); the markers themselves match nothing and are dropped here
-    val eff = effectiveRules(rules, agent)
-      .where(col("pattern").isNotNull)
-      .withColumn("_rb_rx", patternRegex(col("pattern")))
-      .withColumn("_rb_lit",
-        !col("pattern").contains("*") && !col("pattern").endsWith("$"))
-      .withColumn("_rb_len", length(col("pattern")))
-    val byHost = eff.groupBy(col("host").as("_rb_host"))
-      .agg(collect_list(struct(
-        col("pattern").as("pat"), col("_rb_rx").as("rx"),
-        col("_rb_lit").as("lit"), col("_rb_len").as("spec"),
-        col("allow").cast("int").as("allow"))).as("_rb_rules"))
-    // The host/path regex chains are the family's measured per-row cost
-    // center (the UrlCuration `precomputed` lesson): a pipeline that has
-    // already derived them passes the column names and skips re-deriving.
-    val path = precomputedPath.map(col).getOrElse(urlPath(col(urlCol)))
-    val hostC = precomputedHost.map(col)
-      .getOrElse(UrlCuration.urlHost(col(urlCol)))
-    val joined = urls
-      .withColumn("_rb_host", hostC)
-      .join(broadcast(byHost), Seq("_rb_host"), "left")
-    val p = col("_rb_path")
-    val cand = filter(coalesce(col("_rb_rules"),
-        array().cast("array<struct<pat:string,rx:string,lit:boolean,spec:int,allow:int>>")),
-      r => when(r.getField("lit"), p.startsWith(r.getField("pat")))
-        .otherwise(regexp_like(p, r.getField("rx"))))
-    // longest-match fold; tie → Allow; no match → the (-1, allow) init
-    val win = aggregate(cand,
-      struct(lit(-1).as("spec"), lit(1).as("allow")),
-      (acc, r) => when(
-        r.getField("spec") > acc.getField("spec") ||
-          (r.getField("spec") === acc.getField("spec") &&
-            r.getField("allow") > acc.getField("allow")),
-        struct(r.getField("spec").as("spec"),
-          r.getField("allow").as("allow"))).otherwise(acc))
-    joined
-      .withColumn("_rb_path", path)
-      .withColumn("_rb_win", win)
-      .withColumn("allowed", col("_rb_win.allow") === 1)
-      .drop("_rb_host", "_rb_rules", "_rb_win", "_rb_path")
-  }
-
-  /** [[isAllowed]] as one codegen'd kernel ([[graft.expr.RobotsDecide]]):
-    * the effective rule table is collected (host-scale — the documented
-    * heap ceiling at ~10^6 hosts; beyond that, range-partition hosts or
-    * use the relational [[isAllowed]]) and carried as a reference object,
-    * so wildcard regexes compile once per JVM instead of once per ROW
-    * (the non-foldable `regexp_like` cost), literal rules are raw
-    * startsWith probes, and the corpus plan is scan → one projection —
-    * no join node at all. Decision-identical to [[isAllowed]]
-    * (RobotsTxtSpec asserts equality on every fixture matrix). Measured
-    * numbers live in the BASELINE.md robots rows: end-to-end the
-    * host/path DERIVATION regex chains dominate both variants (pass
-    * `precomputedHost`/`precomputedPath` in a pipeline that already has
-    * them — the UrlCuration lesson); on precomputed inputs the kernel's
-    * decision pass is join-free and allocation-light.
-    */
-  def isAllowedFast(urls: DataFrame, urlCol: String, rules: DataFrame,
-                    agent: String,
-                    precomputedHost: Option[String] = None,
-                    precomputedPath: Option[String] = None): DataFrame = {
-    require(urls.columns.contains(urlCol), s"missing column: $urlCol")
-    (precomputedHost.toSeq ++ precomputedPath).foreach(c => require(
-      urls.columns.contains(c), s"missing precomputed column: $c"))
-    val eff = effectiveRules(rules, agent)
-      .where(col("pattern").isNotNull) // rule-less-group markers
-      .select("host", "pattern", "allow").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSeq
-    val table = graft.expr.RobotsDecide.buildTable(eff)
-    urls.withColumn("allowed", graft.expr.RobotsDecide.robots_decide(
-      precomputedPath.map(col).getOrElse(urlPath(col(urlCol))),
-      precomputedHost.map(col).getOrElse(UrlCuration.urlHost(col(urlCol))),
-      table))
-  }
-
-  /** Measured cut line between the two evaluation strategies: the kernel's
-    * reference-object rule table degrades past ~10^5 hosts (the
-    * BASELINE.md 128k-host row reads eff 0.67 — per-row hash probes into
-    * a table that no longer fits the cache hierarchy), while the
-    * relational broadcast join's per-host array rows stay partitioned
-    * state. Default sits just under the measured ceiling.
-    */
-  val KernelHostCeiling: Long = 100000L
-
-  /** ONE entry point that picks the evaluation strategy by rule-table
-    * size: hosts ≤ `hostThreshold` → the join-free codegen'd
-    * [[isAllowedFast]] kernel (the steady-state winner at real-world
-    * host counts); above it → the relational [[isAllowed]] broadcast
-    * join, whose memory/cache footprint scales with Spark's own
-    * broadcast machinery instead of a per-executor reference object.
-    * The two are decision-identical (RobotsTxtSpec asserts equality on
-    * every fixture matrix, and parity through THIS switch on both sides
-    * of the threshold), so the choice is purely a performance route.
-    * The host count is one aggregate over the HOST-scale rules frame —
-    * never the corpus.
-    */
-  def isAllowedAuto(urls: DataFrame, urlCol: String, rules: DataFrame,
-                    agent: String,
-                    precomputedHost: Option[String] = None,
-                    precomputedPath: Option[String] = None,
-                    hostThreshold: Long = KernelHostCeiling): DataFrame = {
-    val nHosts = rules.select(col("host")).distinct().count()
-    if (nHosts <= hostThreshold)
-      isAllowedFast(urls, urlCol, rules, agent, precomputedHost,
-        precomputedPath)
-    else
-      isAllowed(urls, urlCol, rules, agent, precomputedHost,
-        precomputedPath)
+    urls.withColumn("allowed", RobotsDecide.robots_decide(
+      urlPath(col(urlCol)), UrlCuration.urlHost(col(urlCol)),
+      ruleTable(rules, agent)))
   }
 }

@@ -463,14 +463,14 @@ object TextAnalysis {
     * the seed's SHARED gram vocabulary V,
     * `nll(doc | lang) = floor(lang)·|grams(doc)| + Σ_seen delta(lang, g)`
     * where floor(lang) = −ln(1/(T_lang+|V|)) is the unseen-gram cost and
-    * delta = nll(seen) − floor ≤ 0 — so scoring only ever JOINS the
-    * grams a language has actually seen (inner join against the
-    * broadcast dict) instead of crossing every doc-gram with every
-    * language. Every `ln` quantizes ONCE per dictionary row into integer
-    * micro-nats (the Bm25 idf convention), so per-doc scores are exact
-    * long sums: order-independent, partitioning-invariant, and the
-    * oracle recomputes every count relationally, importing only the two
-    * quantized-ln columns (cross-checked by joining ON the counts).
+    * delta = nll(seen) − floor ≤ 0 — so scoring only ever looks up the
+    * grams a language has actually seen instead of pricing every
+    * doc-gram against every language. Every `ln` quantizes ONCE per
+    * dictionary row into integer micro-nats (the Bm25 idf convention),
+    * so per-doc scores are exact long sums: order-independent,
+    * partitioning-invariant, and the oracle recomputes every count
+    * relationally, importing only the two quantized-ln columns
+    * (cross-checked by joining ON the counts).
     */
   def langIdDicts(seed: DataFrame, langCol: String, textCol: String,
                   n: Int = 3): (DataFrame, DataFrame) = {
@@ -479,7 +479,7 @@ object TextAnalysis {
     // unlabeled seed rows train nothing (a NULL lang would otherwise
     // become a NULL "language" in the profile set). localCheckpoint: the
     // totals / vocab-size / delta branches AND both driver collects in
-    // langIdNgramFast consume this frame — without it the seed gram
+    // langIdNgram consume this frame — without it the seed gram
     // explode+aggregation recomputes per consumer (the
     // bigramNllDict/pairCountRows convention).
     val counts = seed.where(col(langCol).isNotNull)
@@ -505,58 +505,21 @@ object TextAnalysis {
   /** Classify every document: `(doc_id, pred_lang, nll_micro, n_grams)` —
     * argmin total NLL, ties broken by lang ascending (a total order, so
     * the prediction is deterministic and engine-replayable); documents
-    * with fewer than `n` characters predict NULL.
+    * with fewer than `n` characters, or NULL text, predict NULL with
+    * `n_grams` 0.
     *
-    * Scale shape: gram explode (narrow) → broadcast dict INNER join
-    * (only seen (gram, lang) rows survive — never doc-grams × languages)
-    * → one map-side-combined (doc, lang) partial aggregation → the tiny
-    * floors frame crossed on (docs × L rows) → one doc-keyed argmin
-    * aggregation. The corpus never shuffles except the per-doc partial
-    * rows.
+    * Scale shape: the trained dictionaries collect to the driver
+    * (seed-scale — V×L rows, the trained-artifact precedent) and ride as
+    * the reference object of one codegen'd pass
+    * ([[graft.expr.LangIdScore]]): every document scores in one
+    * code-point sweep with no explode, join or aggregation — zero
+    * shuffle at any corpus size. TextAnalysisSpec checks it against a
+    * driver replay of the NB formulation; the q_langid_ngram oracle
+    * replays it in SQL.
     */
   def langIdNgram(df: DataFrame, idCol: String, textCol: String,
                   seed: DataFrame, seedLangCol: String,
                   n: Int = 3): DataFrame = {
-    require(df.columns.contains(idCol), s"missing column: $idCol")
-    require(df.columns.contains(textCol), s"missing column: $textCol")
-    val (dict, floors) = langIdDicts(seed, seedLangCol, textCol, n)
-    require(!floors.isEmpty, "language-ID seed trained no languages " +
-      "(empty, unlabeled, or every text shorter than the gram size)")
-    val seen = df
-      .select(col(idCol).as("doc_id"),
-        explode(charNgrams(col(textCol), n)).as("g"))
-      .join(broadcast(dict.select("g", "lang", "delta_micro")), Seq("g"))
-      .groupBy("doc_id", "lang").agg(sum("delta_micro").as("_sum_delta"))
-    // length of the LOWERED text — the same string charNgrams counts
-    // (full case mapping may change code-point counts outside ASCII;
-    // the floor·n_grams identity needs the two to agree)
-    val nGr = df.select(col(idCol).as("doc_id"),
-      greatest(length(lower(col(textCol))) - (n - 1), lit(0)).cast("long")
-        .as("n_grams"))
-    nGr
-      .crossJoin(broadcast(floors.select("lang", "floor_micro")))
-      .join(seen, Seq("doc_id", "lang"), "left")
-      .withColumn("_nll", col("floor_micro") * col("n_grams") +
-        coalesce(col("_sum_delta"), lit(0L)))
-      .groupBy("doc_id")
-      .agg(min(when(col("n_grams") > 0,
-          struct(col("_nll"), col("lang")))).as("_b"),
-        first(col("n_grams")).as("n_grams"))
-      .select(col("doc_id"), col("_b.lang").as("pred_lang"),
-        col("_b._nll").as("nll_micro"), col("n_grams"))
-  }
-
-  /** [[langIdNgram]] as one codegen'd pass ([[graft.expr.LangIdScore]]):
-    * the trained dictionaries collect to the driver (seed-scale — V×L
-    * rows, the trained-artifact precedent) and ride as a reference
-    * object; every document scores in one code-point sweep with zero
-    * explode/join/aggregation — zero shuffle at any corpus size.
-    * Bit-equal output (TextAnalysisSpec parity on every corpus in the
-    * suite; the q_langid_ngram oracle replays the shared formulation).
-    */
-  def langIdNgramFast(df: DataFrame, idCol: String, textCol: String,
-                      seed: DataFrame, seedLangCol: String,
-                      n: Int = 3): DataFrame = {
     require(df.columns.contains(idCol), s"missing column: $idCol")
     require(df.columns.contains(textCol), s"missing column: $textCol")
     val (dict, floors) = langIdDicts(seed, seedLangCol, textCol, n)
@@ -567,8 +530,8 @@ object TextAnalysis {
     val deltaRows = dict.select("g", "lang", "delta_micro").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSeq
     val d = graft.expr.LangIdScore.buildDict(floorRows, deltaRows)
-    // coalesce: a NULL text scores like the relational path's no-gram arm
-    // (pred NULL, n_grams 0) instead of nulling the whole struct
+    // coalesce: a NULL text scores like a too-short one (pred NULL,
+    // n_grams 0) instead of nulling the whole struct
     df.select(col(idCol).as("doc_id"),
         graft.expr.LangIdScore.langid_score(
           coalesce(col(textCol), lit("")), n, d).as("_s"))

@@ -39,13 +39,22 @@ final case class RoleDim(role: String, role_kind: String, is_human: Boolean)
 final case class ToolDim(tool: String, tool_family: String, owner: String)
 
 object Schemas {
-  /** Explicit StructType for streaming reads (readStream needs a schema). */
+  /** Explicit StructType for streaming reads (readStream needs a schema).
+    *
+    * Every field is nullable because that is what readers see: the
+    * streaming file source forces a user schema nullable, and a batch
+    * read takes the file's (nullable) schema. NULL `text` is part of the
+    * contract, not an error: it parses as a grok miss (see
+    * [[Parse.parseGrok]]) and routes to the same sink on every path —
+    * `runBatch`, `StreamingPipeline.start` and `startStreamsShared`
+    * (ParitySpec's NULL-text row).
+    */
   val turn: StructType = StructType(Seq(
-    StructField("conv_id", StringType, nullable = false),
-    StructField("turn_idx", IntegerType, nullable = false),
-    StructField("role", StringType, nullable = false),
-    StructField("text", StringType, nullable = false),
-    StructField("tool", StringType, nullable = false),
-    StructField("ts", TimestampType, nullable = false)
+    StructField("conv_id", StringType),
+    StructField("turn_idx", IntegerType),
+    StructField("role", StringType),
+    StructField("text", StringType),
+    StructField("tool", StringType),
+    StructField("ts", TimestampType)
   ))
 }

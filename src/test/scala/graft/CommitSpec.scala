@@ -41,8 +41,8 @@ class CommitSpec extends SparkTestBase {
   }
 
   test("runBatch read-backs carry the schema a footer read infers; a grok miss reads back NULL") {
-    val cfg = PipelineConfig.default
-    Seq("default" -> None, "config" -> Some(cfg)).foreach { case (name, config) =>
+    Seq("default" -> None, "config" -> Some(PipelineSpec.toolsSalted))
+        .foreach { case (name, config) =>
       val dir = tmpDir(s"commit-schema-$name")
       val res = Pipeline.runBatch(spark, withMiss, dir, config = config)
       Seq("routed" -> res.routed, "sink_counts" -> res.sinkCounts,

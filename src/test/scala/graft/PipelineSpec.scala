@@ -48,10 +48,15 @@ class PipelineSpec extends SparkTestBase {
       ("c2", 0, "assistant", "tool=search status=OK latency=5ms", "search", ts),
       ("c2", 1, "assistant", "tool=my_tool status=OK latency=7ms", "my_tool", ts))
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val cfg = PipelineConfig.default
-    Seq("default" -> None, "config" -> Some(cfg)).foreach { case (name, config) =>
+    Seq(
+      ("default", None, Map("tool_search" -> 2L, Route.RestSink -> 2L)),
+      ("config", Some(PipelineSpec.toolsSalted),
+        Map("tools" -> 3L, Route.RestSink -> 1L))
+    ).foreach { case (name, config, sinks) =>
       val res = Pipeline.runBatch(spark, turns, tmpDir(s"pipe-miss-$name"),
         config = config)
+      assert(res.sinkCounts.collect().map(r =>
+        r.getAs[String](Route.SinkCol) -> r.getAs[Long]("n_turns")).toMap === sinks, name)
       val r = res.convRollup.collect().map(r => r.getAs[String]("conv_id") -> r).toMap
       assert(r("c1").getAs[Long]("n_turns") === 2L, name)
       assert(r("c1").getAs[Int]("n_tools_distinct") === 1, name)
@@ -72,4 +77,14 @@ class PipelineSpec extends SparkTestBase {
     // no shuffle anywhere in parse→enrich→route
     assert(!plan.contains("Exchange hashpartitioning"), plan)
   }
+}
+
+object PipelineSpec {
+
+  /** A second topology for default-vs-config cases: one `tools` sink
+    * instead of `tool_search`/`errors`, and a 4-way rollup salt instead of
+    * 16.
+    */
+  val toolsSalted: PipelineConfig = PipelineConfig.default.copy(
+    sinks = Seq(SinkConfig("tools", "tool_invoked <> ''")), salt = 4)
 }

@@ -56,6 +56,15 @@ class StreamingSpec extends SparkTestBase {
     all.unpersist()
   }
 
+  test("Schemas.turn is the schema readers of turn files report") {
+    val dir = tmpDir("stream-schema")
+    TranscriptGen.turns(spark, 10, seed = 3).drop("_truth")
+      .write.mode("append").parquet(dir)
+    assert(spark.readStream.schema(Schemas.turn).parquet(dir).schema ===
+      Schemas.turn)
+    assert(spark.read.parquet(dir).schema === Schemas.turn)
+  }
+
   test("config streaming commits like start: counts, lineage, route/sent") {
     val inputDir = tmpDir("cfg-commit-in")
     val outDir = tmpDir("cfg-commit-out")

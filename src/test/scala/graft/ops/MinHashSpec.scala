@@ -25,6 +25,33 @@ class MinHashSpec extends SparkTestBase {
     assert(w5.where($"fast" =!= $"hof").isEmpty)
   }
 
+  test("one checkpoint per signature frame: minhashCandidates " +
+    "materializes 1 frame, minhashNearDups 2 (shingle hashes + signatures)") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog today"),
+      (2L, "the quick brown fox jumps over the lazy dog again"),
+      (3L, "an unrelated sentence about something else entirely")
+    ).toDF("id", "text")
+    val sc = spark.sparkContext
+    // the checkpoints are eager, so they exist when the call returns; the
+    // returned frame references them, so none is cleaned before the count
+    def materialized[A](f: => A): (A, Int) = {
+      val before = sc.getPersistentRDDs.keySet
+      val out = f
+      (out, (sc.getPersistentRDDs.keySet -- before).size)
+    }
+    val (cands, nCands) = materialized(
+      Dedup.minhashCandidates(docs, "id", "text"))
+    assert(nCands === 1)
+    val (near, nNear) = materialized(
+      Dedup.minhashNearDups(docs, "id", "text", threshold = 0.5))
+    assert(nNear === 2)
+    assert(cands.select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+      === Seq((1L, 2L)))
+    assert(near.select("id_a", "id_b").as[(Long, Long)].collect().toSeq
+      === Seq((1L, 2L)))
+  }
+
   test("WordShingles ≡ HOF formula on real documents (order included)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     for (k <- Seq(1, 3, 5)) {

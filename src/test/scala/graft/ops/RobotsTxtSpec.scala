@@ -5,7 +5,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** RobotsTxt vs an independent plain-Scala RFC 9309 evaluator, plus the
-  * targeted grammar/matching cases and the zero-corpus-shuffle plan gate.
+  * targeted grammar/matching cases and the join-free kernel plan gate.
   */
 class RobotsTxtSpec extends SparkTestBase {
   import spark.implicits._
@@ -66,22 +66,44 @@ class RobotsTxtSpec extends SparkTestBase {
       }
   }
 
-  /** Runs BOTH implementations — the relational fold and the codegen'd
-    * RobotsDecide kernel — and asserts they agree before returning, so
-    * every fixture matrix in this suite doubles as a cross-check.
+  /** Host key and match target of a URL, in plain Scala: the host is
+    * `UrlCuration.urlHost`'s key (lowercased; scheme, fragment, query,
+    * userinfo, leading `www.` and port stripped), the path keeps case and
+    * query, drops the fragment, and is "/" when empty. A NULL url has no
+    * host.
+    */
+  private def refHostPath(url: String): (Option[String], String) =
+    if (url == null) (None, "/")
+    else {
+      val host = url.trim.toLowerCase
+        .replaceFirst("^[a-z][a-z0-9+.-]*://", "")
+        .replaceFirst("#.*$", "").replaceFirst("\\?.*$", "")
+        .replaceFirst("^[^/?#]*@", "").replaceFirst("^www\\d*\\.", "")
+        .takeWhile(_ != '/').replaceFirst(":\\d+$", "")
+      val path = url.trim.replaceFirst("^[A-Za-z][A-Za-z0-9+.-]*://", "")
+        .replaceFirst("^[^/]*", "").replaceFirst("#.*$", "")
+      (Some(host), if (path.isEmpty) "/" else path)
+    }
+
+  /** Runs [[RobotsTxt.isAllowed]] and asserts every decision equals
+    * [[refAllowed]]'s before returning, so every fixture matrix in this
+    * suite is checked against the independent evaluator.
     */
   private def decide(urls: Seq[(Long, String)],
                      robots: Seq[(String, String)],
                      agent: String): Map[Long, Boolean] = {
     val rules = RobotsTxt.parseRules(
       robots.toDF("host", "robots_txt"))
-    val rel = RobotsTxt.isAllowed(urls.toDF("id", "url"), "url", rules, agent)
+    val got = RobotsTxt.isAllowed(urls.toDF("id", "url"), "url", rules, agent)
       .select("id", "allowed").as[(Long, Boolean)].collect().toMap
-    val fast = RobotsTxt.isAllowedFast(urls.toDF("id", "url"), "url",
-      rules, agent)
-      .select("id", "allowed").as[(Long, Boolean)].collect().toMap
-    assert(fast == rel, "kernel decision diverged from the relational fold")
-    rel
+    assert(got.keySet == urls.map(_._1).toSet)
+    val byHost = robots.toMap
+    for ((id, u) <- urls) {
+      val (host, path) = refHostPath(u)
+      assert(got(id) == refAllowed(host.flatMap(byHost.get), path, agent),
+        s"url $u: engine ${got(id)}")
+    }
+    got
   }
 
   private val robotsA =
@@ -110,16 +132,10 @@ class RobotsTxtSpec extends SparkTestBase {
     val urls = for ((p, i) <- paths.zipWithIndex; h <- Seq("a.com", "b.com", "c.com"))
       yield ((i * 3 + (if (h == "a.com") 0 else if (h == "b.com") 1 else 2)).toLong,
         s"https://$h$p")
+    // decide checks every url against refAllowed; the matrix must
+    // exercise both verdicts
     val got = decide(urls, robots, "graftbot")
-    val byHost = robots.toMap
-    for ((id, u) <- urls) {
-      val host = u.stripPrefix("https://").takeWhile(_ != '/')
-      val path = u.stripPrefix(s"https://$host") match {
-        case "" => "/"; case p => p
-      }
-      assert(got(id) == refAllowed(byHost.get(host), path, "graftbot"),
-        s"url $u: engine ${got(id)}")
-    }
+    assert(got.values.toSet == Set(true, false))
   }
 
   test("grammar: consecutive UA merge, orphan rules dropped, empty Disallow no-op") {
@@ -165,27 +181,6 @@ class RobotsTxtSpec extends SparkTestBase {
     assert(got == Map(1L -> false, 2L -> false, 3L -> false, 4L -> true))
   }
 
-  test("plan gate: corpus side has no exchange beyond the rules broadcast") {
-    val rules = RobotsTxt.parseRules(
-      Seq("a.com" -> robotsA).toDF("host", "robots_txt"))
-    val out = RobotsTxt.isAllowed(
-      spark.range(1000).select(col("id"),
-        concat(lit("https://a.com/p/"), col("id")).as("url")),
-      "url", rules, "graftbot")
-    val plan = out.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    // rules prep may shuffle its host-scale frame; assert the probe side
-    // (Range scan → join) is direct: Range appears without an Exchange
-    // between it and the join in the formatted plan
-    val formatted = out.queryExecution.explainString(
-      org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-    val rangeIdx = formatted.indexOf("Range")
-    assert(rangeIdx >= 0)
-    assert(!formatted.substring(0, formatted.indexOf("BroadcastHashJoin"))
-      .contains("Exchange hashpartitioning"),
-      "probe side shuffled:\n" + formatted)
-  }
-
   test("kernel path: no join node, stays in whole-stage codegen, " +
     "interpreted ≡ codegen") {
     val rules = RobotsTxt.parseRules(
@@ -193,25 +188,32 @@ class RobotsTxtSpec extends SparkTestBase {
     val urls = spark.range(500).select(col("id"),
       concat(lit("https://a.com/private/"), col("id"), lit(".html"))
         .as("url"))
-    val out = RobotsTxt.isAllowedFast(urls, "url", rules, "graftbot")
+    val out = RobotsTxt.isAllowed(urls, "url", rules, "graftbot")
     val plan = out.queryExecution.executedPlan.toString
-    assert(!plan.contains("Join"), plan)
+    assert(!plan.contains("Join") && !plan.contains("Exchange"), plan)
     // "*(1)" node prefixes = the whole chain is inside one codegen stage
     assert(plan.trim.startsWith("*(1)"), plan)
-    // interpreted eval (the nullSafeEval path) agrees with codegen
-    val eff = RobotsTxt.effectiveRules(rules, "graftbot")
-      .where(col("pattern").isNotNull) // rule-less-group markers
-      .select("host", "pattern", "allow").collect()
-      .map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSeq
-    val table = graft.expr.RobotsDecide.buildTable(eff)
+    // interpreted eval (RobotsDecide.compute) agrees with codegen
+    val table = RobotsTxt.ruleTable(rules, "graftbot").value
     val got = out.select("id", "allowed")
       .as[(Long, Boolean)].collect().toMap
-    for (i <- 0L until 500L) {
+    // an executor gets the table through Java serialization, which
+    // writes the (host, pattern, allow) rows and rebuilds them on read
+    val bytes = new java.io.ByteArrayOutputStream()
+    val oos = new java.io.ObjectOutputStream(bytes)
+    oos.writeObject(table); oos.close()
+    val shipped = new java.io.ObjectInputStream(
+      new java.io.ByteArrayInputStream(bytes.toByteArray)).readObject()
+      .asInstanceOf[graft.expr.RobotsDecide.Table]
+    for (i <- 0L until 500L; t <- Seq(table, shipped)) {
       val p = org.apache.spark.unsafe.types.UTF8String
         .fromString(s"/private/$i.html")
       val h = org.apache.spark.unsafe.types.UTF8String.fromString("a.com")
-      assert(graft.expr.RobotsDecide.compute(p, h, table) == got(i))
+      assert(graft.expr.RobotsDecide.compute(p, h, t) == got(i))
     }
+    assert(Seq("a.com", "b.com").forall(h =>
+      shipped.rules(h).map(r => (r.pattern, r.allow)).toSet ==
+        table.rules(h).map(r => (r.pattern, r.allow)).toSet))
   }
 
   test("RFC corners: CRLF files parse, a rule-less specific group still " +
@@ -226,26 +228,25 @@ class RobotsTxtSpec extends SparkTestBase {
     // CRLF patterns must not keep a trailing \r (it would unmatch
     // everything): the star rule above DID match, q.e.d.; and specificity
     // counts code points — "/a*" (3) ties "/a😀" (3 cp, 4 UTF-16 units),
-    // tie → Allow, on the kernel path too (decide cross-checks both)
+    // tie → Allow (decide checks it against refAllowed)
     val emoji = Seq("b.com" -> "User-agent: *\nAllow: /a*\nDisallow: /a😀\n")
     assert(decide(Seq(1L -> "https://b.com/a😀x"), emoji, "bot")(1L))
   }
 
-  test("precomputed host/path seam ≡ derived, both variants") {
-    val rules = RobotsTxt.parseRules(
-      Seq("a.com" -> robotsA, "b.com" -> robotsB).toDF("host", "robots_txt"))
-    val urls = (0L until 100L).map(i =>
-      (i, s"https://${if (i % 2 == 0) "a" else "b"}.com/private/$i.html"))
-      .toDF("id", "url")
-      .withColumn("h", UrlCuration.urlHost(col("url")))
-      .withColumn("p", RobotsTxt.urlPath(col("url")))
-    def m(df: org.apache.spark.sql.DataFrame) =
-      df.select("id", "allowed").as[(Long, Boolean)].collect().toMap
-    val base = m(RobotsTxt.isAllowed(urls, "url", rules, "graftbot"))
-    assert(m(RobotsTxt.isAllowed(urls, "url", rules, "graftbot",
-      Some("h"), Some("p"))) == base)
-    assert(m(RobotsTxt.isAllowedFast(urls, "url", rules, "graftbot",
-      Some("h"), Some("p"))) == base)
+  test("a NULL or empty url has no host, so no robots: allowed, never NULL") {
+    // a star Disallow-all: any url that reached a robots row would block
+    val robots = Seq("a.com" -> "User-agent: *\nDisallow: /\n")
+    val got = decide(Seq(1L -> null, 2L -> "", 3L -> "https://a.com/x"),
+      robots, "graftbot")
+    assert(got == Map(1L -> true, 2L -> true, 3L -> false))
+    // the interpreted path agrees, and the column is declared non-null
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.StringType
+    val table = RobotsTxt.ruleTable(RobotsTxt.parseRules(
+      robots.toDF("host", "robots_txt")), "graftbot")
+    val e = graft.expr.RobotsDecide(Literal(null, StringType),
+      Literal(null, StringType), table)
+    assert(e.eval() == true && !e.nullable)
   }
 
   test("partitioning invariance") {
@@ -259,27 +260,5 @@ class RobotsTxtSpec extends SparkTestBase {
       "url", rules, "graftbot")
       .select("id", "allowed").as[(Long, Boolean)].collect().toMap
     assert(a == b)
-  }
-
-  test("isAllowedAuto: identical decisions on both sides of the host " +
-    "threshold; kernel below (join-free), relational above (broadcast)") {
-    val robots = Seq("a.com" -> robotsA, "b.com" -> robotsB)
-    val urls = (0L until 100L).map(i =>
-      (i, s"https://${if (i % 2 == 0) "a" else "b"}.com/private/$i.html"))
-    val rules = RobotsTxt.parseRules(robots.toDF("host", "robots_txt"))
-    val expect = decide(urls, robots, "graftbot")
-    // 2 hosts ≤ threshold 10 → kernel route: no join node in the plan
-    val viaKernel = RobotsTxt.isAllowedAuto(urls.toDF("id", "url"), "url",
-      rules, "graftbot", hostThreshold = 10L)
-    assert(!viaKernel.queryExecution.executedPlan.toString.contains("Join"))
-    assert(viaKernel.select("id", "allowed").as[(Long, Boolean)]
-      .collect().toMap == expect)
-    // 2 hosts > threshold 1 → relational route: the rules broadcast join
-    val viaRel = RobotsTxt.isAllowedAuto(urls.toDF("id", "url"), "url",
-      rules, "graftbot", hostThreshold = 1L)
-    assert(viaRel.queryExecution.executedPlan.toString
-      .contains("BroadcastHashJoin"))
-    assert(viaRel.select("id", "allowed").as[(Long, Boolean)]
-      .collect().toMap == expect)
   }
 }

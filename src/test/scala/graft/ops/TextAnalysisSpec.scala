@@ -95,102 +95,106 @@ class TextAnalysisSpec extends SparkTestBase {
     assert(plan.contains("TakeOrderedAndProject"), plan)
   }
 
+  /** Driver replay of the char-n-gram Naive-Bayes formulation, ln
+    * quantization included: trains on `seed` (lang, text) and maps a doc
+    * text to (pred_lang, nll_micro, n_grams). Grams are CODE-POINT
+    * n-grams of the lowercased text; ties go to the smaller lang (the
+    * langs here are ASCII, where String order is byte order).
+    */
+  private def langIdReplay(seed: Seq[(String, String)], n: Int = 3)
+      : String => (Option[String], Option[Long], Long) = {
+    def grams(s: String): Seq[String] = {
+      val cps = s.toLowerCase.codePoints().toArray
+      (0 to cps.length - n).map(i => new String(cps, i, n))
+    }
+    val counts = seed.flatMap { case (l, t) => grams(t).map(l -> _) }
+      .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    val totals = counts.groupBy(_._1._1)
+      .map { case (l, m) => l -> m.values.sum }
+    val vocab = counts.keySet.map(_._2).size
+    def q(p: Double): Long = math.floor(-math.log(p) * 1e6 + 0.5).toLong
+    def floorL(l: String): Long = q(1.0 / (totals(l) + vocab))
+    def nllOf(l: String, gs: Seq[String]): Long =
+      floorL(l) * gs.length + gs.map { g =>
+        counts.get(l -> g)
+          .map(c => q((c + 1).toDouble / (totals(l) + vocab)) - floorL(l))
+          .getOrElse(0L)
+      }.sum
+    txt => {
+      val gs = if (txt == null) Seq.empty else grams(txt)
+      if (gs.isEmpty) (None, None, 0L)
+      else {
+        val (nll, lang) = totals.keys.toSeq.map(l => (nllOf(l, gs), l)).min
+        (Some(lang), Some(nll), gs.length.toLong)
+      }
+    }
+  }
+
   test("langIdNgram ≡ driver NB replay; distinct-alphabet langs classified " +
     "correctly; short doc → NULL; tie broken by lang; partitioning-" +
     "invariant") {
     // two hand languages with disjoint character distributions
-    val seed = Seq(
+    val seedRows = Seq(
       ("aa", "abba baab abab abba baba"), ("aa", "aabb bbaa abba baab"),
-      ("zz", "zyzzy yzzyz zzyzy yzyzy"), ("zz", "zzyy yyzz zyzy yzyz")
-    ).toDF("lang", "text")
-    val docs = Seq(
-      (0L, "abba abab"),          // clearly aa
-      (1L, "zyzzy zyzy"),         // clearly zz
-      (2L, "ab"),                 // < 3 chars → NULL
-      (3L, "qqqq qqqq")           // all grams unseen → pure floor, tie
-    ).toDF("doc_id", "text")
+      ("zz", "zyzzy yzzyz zzyzy yzyzy"), ("zz", "zzyy yyzz zyzy yzyz"))
+    val seed = seedRows.toDF("lang", "text")
+    val texts = Seq(
+      0L -> "abba abab",          // clearly aa
+      1L -> "zyzzy zyzy",         // clearly zz
+      2L -> "ab",                 // < 3 chars → NULL
+      3L -> "qqqq qqqq")          // all grams unseen → pure floor, tie
+    val docs = texts.toDF("doc_id", "text")
     val got = TextAnalysis.langIdNgram(docs, "doc_id", "text", seed, "lang")
       .as[(Long, Option[String], Option[Long], Long)].collect()
       .map(r => r._1 -> r).toMap
-    // driver replay of the full NB formulation incl. quantization
-    def grams(s: String): Seq[String] =
-      if (s.length < 3) Seq.empty
-      else (0 to s.length - 3).map(i => s.toLowerCase.substring(i, i + 3))
-    val seedRows = seed.as[(String, String)].collect()
-    val counts = seedRows.flatMap { case (l, t) => grams(t).map(l -> _) }
-      .groupBy(identity).map { case (k, v) => k -> v.size.toLong }
-    val totals = counts.groupBy(_._1._1)
-      .map { case (l, m) => l -> m.values.sum }
-    val vocab = counts.keySet.map(_._2)
-    def q(p: Double): Long = math.floor(-math.log(p) * 1e6 + 0.5).toLong
-    def floorL(l: String): Long = q(1.0 / (totals(l) + vocab.size))
-    def nllOf(l: String, txt: String): Long = {
-      val gs = grams(txt)
-      floorL(l) * gs.length + gs.map { g =>
-        counts.get(l -> g)
-          .map(c => q((c + 1).toDouble / (totals(l) + vocab.size)) -
-            floorL(l))
-          .getOrElse(0L)
-      }.sum
-    }
-    for ((id, txt) <- Seq(0L -> "abba abab", 1L -> "zyzzy zyzy",
-        3L -> "qqqq qqqq")) {
-      val best = Seq("aa", "zz").map(l => (nllOf(l, txt), l)).min
-      assert(got(id) == ((id, Some(best._2), Some(best._1),
-        (txt.length - 2).toLong)), s"doc $id")
+    val replay = langIdReplay(seedRows)
+    for ((id, txt) <- texts) {
+      val (lang, nll, nGrams) = replay(txt)
+      assert(got(id) == ((id, lang, nll, nGrams)), s"doc $id")
     }
     assert(got(0L)._2.contains("aa") && got(1L)._2.contains("zz"))
     assert(got(2L) == ((2L, None, None, 0L)))
     // doc 3: every gram unseen in both langs → score = floor·n_grams for
-    // each; the winner must be the deterministic (nll, lang) minimum
-    val exp3 = Seq("aa", "zz")
-      .map(l => (floorL(l) * grams("qqqq qqqq").length, l)).min
-    assert(got(3L)._2.contains(exp3._2))
+    // each; the replay's (nll, lang) minimum is the deterministic winner
+    assert(got(3L)._2.isDefined)
     // partitioning invariance
     val got7 = TextAnalysis.langIdNgram(docs.repartition(7), "doc_id",
       "text", seed.repartition(3), "lang")
       .as[(Long, Option[String], Option[Long], Long)].collect()
       .map(r => r._1 -> r).toMap
     assert(got7 == got)
-    // the one-pass kernel is bit-equal to the relational formulation
-    val fast = TextAnalysis.langIdNgramFast(docs, "doc_id", "text",
-      seed, "lang")
-      .as[(Long, Option[String], Option[Long], Long)].collect()
-      .map(r => r._1 -> r).toMap
-    assert(fast == got, "LangIdScore kernel diverged from relational path")
-    // kernel plan: no join, no aggregation, single codegen'd projection
-    val plan = TextAnalysis.langIdNgramFast(docs, "doc_id", "text",
+    // one codegen'd projection: no join, no aggregation
+    val plan = TextAnalysis.langIdNgram(docs, "doc_id", "text",
       seed, "lang").queryExecution.executedPlan.toString
     assert(!plan.contains("Join") && !plan.contains("Aggregate"), plan)
   }
 
-  test("langIdNgramFast ≡ langIdNgram on the real corpus slice " +
-    "(five-lang dictionary, null text, unicode)") {
-    val docs = Seq(
-      (0L, "the quick brown fox jumps over the lazy dog"),
-      (1L, "der schnelle braune fuchs springt"),
-      (2L, null.asInstanceOf[String]),
-      (3L, "ab"),
-      (4L, "数据 查询 引擎 the query engine 日本語テキスト"),
-      (5L, "El rápido zorro marrón salta sobre el perro")
-    ).toDF("doc_id", "text")
-    val seed = Seq(
+  test("langIdNgram ≡ driver NB replay on the five-language unicode slice") {
+    val texts = Seq(
+      0L -> "the quick brown fox jumps over the lazy dog",
+      1L -> "der schnelle braune fuchs springt",
+      2L -> null.asInstanceOf[String],
+      3L -> "ab",
+      4L -> "数据 查询 引擎 the query engine 日本語テキスト",
+      5L -> "El rápido zorro marrón salta sobre el perro")
+    val seedRows = Seq(
       ("en", "the quick brown fox and the lazy dog run"),
       ("de", "der schnelle braune fuchs und der faule hund"),
       ("es", "el zorro marrón rápido y el perro perezoso"),
       ("zh", "数据 查询 引擎 表 行 列"),
-      ("ja", "日本語 テキスト 解析 処理")
-    ).toDF("lang", "text")
-    val rel = TextAnalysis.langIdNgram(docs, "doc_id", "text", seed, "lang")
-      .as[(Long, Option[String], Option[Long], Option[Long])].collect().toSet
-    val fast = TextAnalysis.langIdNgramFast(docs, "doc_id", "text",
-      seed, "lang")
-      .as[(Long, Option[String], Option[Long], Option[Long])].collect().toSet
-    assert(fast == rel)
-    val byId = rel.map(r => r._1 -> r._2).toMap
-    assert(byId(0L).contains("en") && byId(1L).contains("de") &&
-      byId(5L).contains("es"))
-    assert(byId(2L).isEmpty && byId(3L).isEmpty)
+      ("ja", "日本語 テキスト 解析 処理"))
+    val got = TextAnalysis.langIdNgram(texts.toDF("doc_id", "text"),
+        "doc_id", "text", seedRows.toDF("lang", "text"), "lang")
+      .as[(Long, Option[String], Option[Long], Long)].collect()
+      .map(r => r._1 -> r).toMap
+    val replay = langIdReplay(seedRows)
+    for ((id, txt) <- texts) {
+      val (lang, nll, nGrams) = replay(txt)
+      assert(got(id) == ((id, lang, nll, nGrams)), s"doc $id")
+    }
+    assert(got(0L)._2.contains("en") && got(1L)._2.contains("de") &&
+      got(5L)._2.contains("es"))
+    assert(got(2L)._2.isEmpty && got(3L)._2.isEmpty)
   }
 
   test("lmScore ≡ driver replay (exact micro-nat sums + integer-div " +
