@@ -103,16 +103,4 @@ object Aggregate {
         min(col("p_first")).as("first_ts"),
         max(col("p_last")).as("last_ts"),
         sum(col("p_lat")).as("sum_latency_ms"))
-
-  /** Unsalted single-phase rollup — correctness oracle for the salted plan
-    * (results must be identical; asserted in AggregateSpec).
-    */
-  def convRollupUnsalted(parsed: DataFrame): DataFrame =
-    parsed.groupBy(col("conv_id")).agg(
-      count(lit(1)).as("n_turns"),
-      sum(when(col("err_code").isNotNull, 1L).otherwise(0L)).as("n_errors"),
-      count_distinct(countedTool(col("tool_invoked"))).cast("int").as("n_tools_distinct"),
-      min(col("ts")).as("first_ts"),
-      max(col("ts")).as("last_ts"),
-      sum(col("latency_ms")).as("sum_latency_ms"))
 }

@@ -1,22 +1,26 @@
 package graft
 
 import scala.collection.concurrent.TrieMap
+import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
 
 /** obsreport-style pipeline observability (SURVEY.md §2.12; ref
   * `obsreport/obsreport.go`). Counter taxonomy copied verbatim:
   * accepted / refused / dropped / sent / failed, tagged by stage name.
   *
-  * Two mechanisms, matching the reference's metrics vs spans split:
+  * Three mechanisms, none a second pass over the data:
   *  - [[ObsMetrics]]: named `LongAccumulator`s (cluster-wide, cheap, survive
   *    into the driver) — the counters.
   *  - [[Obs.observed]]: `Dataset.observe` row counts per stage — exact
-  *    per-action numbers without a second pass over the data.
-  *  - [[Obs.lineage]]: per-partition row counts, written as a small lineage
-  *    table per batch (north rule: "per-partition lineage").
+  *    per-action numbers.
+  *  - [[Obs.countRouted]]: the one count of every routed commit (batch and
+  *    micro-batch). A collected (partition, sink) aggregate writes the
+  *    per-partition lineage table (north rule: "per-partition lineage")
+  *    and `sink_counts`, and fills `route/sent` and `parse/accepted`.
   */
 final class ObsMetrics(spark: SparkSession) extends Serializable {
   private val accs = TrieMap.empty[String, LongAccumulator]
@@ -90,8 +94,7 @@ object Obs {
     * counter taxonomy — `rows` → accepted, `null_keys`/`dropped` →
     * dropped (e.g. the LSH hot-bucket cap reports its overflow that way).
     */
-  private[graft] def harvest(metrics: ObsMetrics, name: String,
-                             row: org.apache.spark.sql.Row): Unit =
+  private[graft] def harvest(metrics: ObsMetrics, name: String, row: Row): Unit =
     if (name.startsWith("graft_")) {
       val stage = name.stripPrefix("graft_")
       val r = row.schema.fieldNames.indexOf("rows")
@@ -110,36 +113,52 @@ object Obs {
       count(lit(1)).as("rows"),
       count_if(col("conv_id").isNull).as("null_keys"))
 
-  /** Per-partition lineage frame for one batch:
-    * (batch_id, partition_id, stage, rows). A `groupBy(spark_partition_id())`
-    * — no mapPartitions, stays declarative. The partitions are those of
-    * `df` as the caller passes it: for the routed frame these are the
-    * routed (pre-write) partitions, not the tasks of
-    * [[Route.writePartitioned]], which range-partitions the rows again.
-    */
-  def lineage(df: DataFrame, batchId: Long, stage: String): DataFrame =
-    df.groupBy(spark_partition_id().as("partition_id"))
-      .agg(count(lit(1)).as("rows"))
-      .withColumn("batch_id", lit(batchId))
-      .withColumn("stage", lit(stage))
-      .select("batch_id", "partition_id", "stage", "rows")
+  /** The per-sink counts [[countRouted]] hands on: [[Aggregate.sinkCounts]]'s layout. */
+  val SinkCountsSchema: StructType =
+    StructType.fromDDL(s"${Route.SinkCol} STRING NOT NULL, n_turns BIGINT NOT NULL")
 
-  /** Write the lineage table for one batch and return the total row count.
-    * The aggregated frame is ≤ #partitions rows, so it is collected once
-    * and re-emitted locally — callers get the exact sent-row count WITHOUT
-    * a second pass over `df` (round-2 ran an extra `count()` action per
-    * micro-batch just for the `sent` counter).
+  private val LineageSchema = StructType.fromDDL("batch_id BIGINT NOT NULL, " +
+    "partition_id INT NOT NULL, stage STRING NOT NULL, rows BIGINT NOT NULL")
+
+  /** The one count of a committed batch: `groupBy(spark_partition_id(),
+    * keys…)` over `df`, collected (≤ partitions × key values rows). Writes
+    * the per-partition sums to `_lineage/stage=<stage>/batch_id=<batchId>`
+    * while `keyed` consumes the rows ([[Commit.all]]: one failed write does
+    * not stop the other); returns the total. The partitions are
+    * those of `df`: for the routed frame, the routed (pre-write) ones, not
+    * the range-partitioned tasks of [[Route.writePartitioned]].
     */
+  private def countBatch(df: DataFrame, batchId: Long, stage: String, outDir: String,
+                         keys: Column*)(keyed: Array[Row] => Unit): Long = {
+    val rows = df.groupBy(spark_partition_id() +: keys: _*).count().collect()
+    val perPartition = rows.groupMapReduce(_.getInt(0))(_.getLong(keys.size + 1))(_ + _)
+    Commit.all(
+      () => df.sparkSession.createDataFrame(perPartition.toSeq
+          .map { case (p, n) => Row(batchId, p, stage, n) }.asJava, LineageSchema)
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/_lineage/stage=$stage/batch_id=$batchId"),
+      () => keyed(rows))
+    perPartition.values.sum
+  }
+
+  /** Write the lineage table for one batch and return its row count. */
   def writeLineage(df: DataFrame, batchId: Long, stage: String,
-                   outDir: String): Long = {
-    val lin = lineage(df, batchId, stage)
-    val rows = lin.collect()
-    val spark = df.sparkSession
-    spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), lin.schema)
-      .coalesce(1)
-      .write.mode("overwrite")
-      .parquet(s"$outDir/_lineage/stage=$stage/batch_id=$batchId")
-    rows.iterator.map(_.getAs[Long]("rows")).sum
+                   outDir: String): Long =
+    countBatch(df, batchId, stage, outDir)(_ => ())
+
+  /** How a routed commit counts its rows, batch and micro-batch alike:
+    * one [[countBatch]] keyed by sink writes the lineage under stage
+    * `route`, hands the per-sink sums to `writeSinkCounts` as a local frame
+    * of [[SinkCountsSchema]], and adds the total to `route/sent` and
+    * `parse/accepted` of `obs` once both writes succeed.
+    */
+  def countRouted(routed: DataFrame, batchId: Long, outDir: String,
+                  obs: Option[ObsMetrics])(writeSinkCounts: DataFrame => Unit): Unit = {
+    val n = countBatch(routed, batchId, "route", outDir, col(Route.SinkCol)) { rows =>
+      writeSinkCounts(routed.sparkSession.createDataFrame(
+        rows.groupMapReduce(_.getString(1))(_.getLong(2))(_ + _)
+          .toSeq.map { case (sink, c) => Row(sink, c) }.asJava, SinkCountsSchema))
+    }
+    obs.foreach { m => m.sent("route").add(n); m.accepted("parse").add(n) }
   }
 }

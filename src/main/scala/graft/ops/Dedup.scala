@@ -211,14 +211,16 @@ object Dedup {
       .drop("band")
 
   /** Hot-bucket guard, generalized over the bucket key: cap rows per key
-    * group in deterministic id order, optionally reporting rows/dropped
-    * through an observe tag. ONE definition of the drop-accounting
-    * contract (rows = pre-cap total, dropped = overflow) shared by the
-    * minhash band join and [[Similarity.knnGraphLsh]] — ObsMetrics
-    * harvesting and the spec suites depend on it not drifting.
+    * group (NULL keys included) in deterministic id order, optionally
+    * reporting rows/dropped through an observe tag. ONE definition of the
+    * drop-accounting contract (rows = pre-cap total, dropped = the rows
+    * the cap removes) shared by the minhash band join and
+    * [[Similarity.knnGraphLsh]] — ObsMetrics harvesting and the spec
+    * suites depend on it not drifting.
     *
     * SORT-FREE: the retained set is "the `bucketCap` smallest ids per
-    * bucket", computed as a bounded [[graft.expr.MinKThreshold]]
+    * bucket" (in an overflowing bucket: plus every id tied with the
+    * cap-th, minus any NULL id), computed as a bounded [[graft.expr.MinKThreshold]]
     * aggregate (partial buffers ≤ cap longs, so the hottest bucket never
     * concentrates in one task) joined back co-partitioned on the bucket
     * key and applied as a filter. The earlier
@@ -244,32 +246,32 @@ object Dedup {
     val idKey = df.schema(idCol).dataType match {
       case ByteType | ShortType | IntegerType | LongType =>
         col(idCol).cast("long")
-      case _ => xxhash64(col(idCol))
+      case _ => when(col(idCol).isNotNull, xxhash64(col(idCol)))
     }
     val th = df.groupBy(keyCols.map(col): _*).agg(
       graft.expr.MinKThreshold.mink_threshold(idKey, bucketCap)
         .as("_cap_th"),
       count(lit(1)).as("_cap_n"))
-    // same totals as the row-level form: rows = pre-cap count,
-    // dropped = per-bucket overflow (coalesced so an empty frame reads 0);
-    // observed BEFORE the overflow filter so every bucket is counted
-    val tagged = obsTag.map(t => th.observe(t,
-      coalesce(sum(col("_cap_n")), lit(0L)).as("rows"),
-      coalesce(sum(greatest(col("_cap_n") - bucketCap, lit(0L))),
-        lit(0L)).as("dropped"))).getOrElse(th)
-    // Join ONLY the overflowing buckets (rare by the cap's premise): a
-    // left join whose build side AQE sizes at runtime — small (the normal
-    // case, ≤ rows/cap buckets even adversarially) converts to broadcast
-    // and the corpus side never concentrates; a degenerate flood of
-    // overflow buckets falls back to the shuffled join on its own. The
-    // first co-partitioned cut shipped EVERY row to the hot bucket's one
-    // reducer just to filter it — measured flat in cores (5.9→5.3 s,
-    // 8→32) on a 12M-row single-bucket stress while this shape scales.
-    val over = tagged.where(col("_cap_n") > bucketCap)
-      .select((keyCols.map(col) :+ col("_cap_th")): _*)
-    df.join(over, keyCols, "left")
-      .where(col("_cap_th").isNull || idKey <= col("_cap_th"))
-      .drop("_cap_th")
+    // Join ONLY the overflowing buckets (rare by the cap's premise): AQE
+    // sizes the build side at runtime — small (≤ rows/cap buckets even
+    // adversarially) converts to broadcast and the corpus side never
+    // concentrates; a flood of overflow buckets falls back to a shuffled
+    // join. A co-partitioned cut shipped EVERY row to the hot bucket's one
+    // reducer: flat in cores (5.9→5.3 s, 8→32) on a 12M-row stress bucket.
+    val over = th.where(col("_cap_n") > bucketCap)
+      .select(keyCols.indices.map(i => col(keyCols(i)).as(s"_cap_k$i")) :+
+        col("_cap_th"): _*)
+    val joined = df.join(over, keyCols.indices
+      .map(i => col(keyCols(i)) <=> col(s"_cap_k$i")).reduce(_ && _), "left")
+    // Null-safe on the key: a NULL bucket is capped like any other. Ids
+    // tied at the threshold all survive (an exact cap needs a per-bucket
+    // sort) and a NULL id has no rank (dropped only from an overflowing
+    // bucket), so `dropped` counts the rows this filter removes.
+    val kept = col("_cap_th").isNull || coalesce(idKey <= col("_cap_th"), lit(false))
+    obsTag.fold(joined)(t => joined.observe(t,
+        count(lit(1)).as("rows"), count_if(!kept).as("dropped")))
+      .where(kept)
+      .drop(over.columns.toSeq: _*)
   }
 
   private def capBuckets(banded: DataFrame, idCol: String, bucketCap: Int,

@@ -203,9 +203,9 @@ object Ivf {
     * extra batch level.
     *
     * Replay-guarded like the streaming-dedup signature index: if the
-    * batch partition already exists the append is a NO-OP (idempotent
+    * batch partition already exists the cells append is a NO-OP (idempotent
     * under checkpoint-replay, where a failed sink re-runs the batch).
-    * Returns true iff the batch was written. (Guard granularity is the
+    * Returns true iff the cells were written. (Guard granularity is the
     * batch directory — a crash MID-write can leave a partial batch that
     * the guard then skips; atomic multi-partition commits are
     * table-format territory at scale, same note as the streaming-dedup
@@ -215,22 +215,26 @@ object Ivf {
                     batch: DataFrame, idCol: String, vecCol: String,
                     batchId: Long): Boolean = {
     require(batchId > 0, s"batchId must be > 0 (0 is the initial build): $batchId")
-    if (IndexGuard.replayed(spark, dir, "cells", batchId)) return false
+    val fresh = !IndexGuard.replayed(spark, dir, "cells", batchId)
     val centroids = readCentroids(spark, dir)
-    assignCells(batch.select(col(idCol).as("id"), col(vecCol).as("v")),
-        "id", "v", centroids)
-      .withColumn("batch_id", lit(batchId))
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("batch_id", "cell")
-      .parquet(s"$dir/cells")
-    // per-batch drift statistic (read back from the written partition —
-    // the same pass that validates the append); the replay guard above
-    // makes the flat append exactly-once per batch
-    assignedCosStats(spark.read.parquet(s"$dir/cells")
-        .where(col("batch_id") === batchId), centroids)
-      .withColumn("batch_id", lit(batchId))
-      .coalesce(1).write.mode("append").parquet(s"$dir/drift")
-    true
+    if (fresh)
+      assignCells(batch.select(col(idCol).as("id"), col(vecCol).as("v")),
+          "id", "v", centroids)
+        .withColumn("batch_id", lit(batchId))
+        .repartition(col("cell"))
+        .write.mode("append").partitionBy("batch_id", "cell")
+        .parquet(s"$dir/cells")
+    // per-batch drift statistic, read back from the written partition (the
+    // pass that validates the append). A crash after the cells leaves a
+    // guarded batch without it: a replay restores the row, once per batch
+    def hasDrift = IndexGuard.exists(spark, s"$dir/drift") &&
+      !spark.read.parquet(s"$dir/drift").where(col("batch_id") === batchId).isEmpty
+    if (fresh || (IndexGuard.exists(spark, s"$dir/cells/batch_id=$batchId") && !hasDrift))
+      assignedCosStats(spark.read.parquet(s"$dir/cells")
+          .where(col("batch_id") === batchId), centroids)
+        .withColumn("batch_id", lit(batchId))
+        .coalesce(1).write.mode("append").parquet(s"$dir/drift")
+    fresh
   }
 
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,

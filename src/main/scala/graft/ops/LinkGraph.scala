@@ -126,14 +126,12 @@ object LinkGraph {
     df.select(UrlCuration.urlDomain(col(urlCol)).as("_at_src"),
         explode(zip_with(hrefs, texts, (h, a) =>
           struct(h.as("href"), a.as("anchor")))).as("_at_a"))
-      // Per HTML resolution rules an href without a scheme and without a
-      // protocol-relative "//" prefix is RELATIVE — same-site navigation
-      // by construction. Without this gate "/x" derives an empty target
-      // domain (and rolls terms up under domain "") and "page.html"
-      // derives a bogus host-shaped domain; both must drop with the
-      // self-domain anchors.
-      .where(col("_at_a.href").rlike("^(?i)[a-z][a-z0-9+.-]*://") ||
-        substring(col("_at_a.href"), 1, 2) === "//")
+      // Only an href with a scheme names another site: a RELATIVE href is
+      // same-site navigation ("/x" derives domain "", "page.html" a bogus
+      // host-shaped one), and a protocol-relative "//host/…" href is
+      // excluded too (`urlDomain` strips only "scheme://"; so does the
+      // DuckDB oracle).
+      .where(col("_at_a.href").rlike("^(?i)[a-z][a-z0-9+.-]*://"))
       .select(col("_at_src"),
         UrlCuration.urlDomain(col("_at_a.href")).as("domain"),
         col("_at_a.anchor").as("_at_anchor"))

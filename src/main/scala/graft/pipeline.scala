@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** End-to-end batch pipeline: parse → enrich → route → aggregate → commit
   * (SURVEY.md §3.2 Spark analog). parse/enrich/route are narrow
@@ -45,10 +46,11 @@ object Pipeline {
   }
 
   /** Full batch run with fanout write + aggregates + lineage.
-    * The routed frame is persisted once (cloningfanout analog) because four
-    * consumers read it: the partitioned write, both aggregates and the
-    * lineage. The four writes run concurrently ([[Commit.all]]); the frame
-    * is unpersisted only after every write has ended.
+    * The routed frame is persisted once (cloningfanout analog) because
+    * three consumers read it: the partitioned write, the rollup and the
+    * one count ([[Obs.countRouted]]) that writes the lineage and
+    * `sink_counts` and fills `obs`. They run concurrently ([[Commit.all]]);
+    * the frame is unpersisted only after every write has ended.
     *
     * `config`: the topology; `None` means [[PipelineConfig.default]].
     * `convClustered`: pass true when `turns` comes from a conv-bucketed
@@ -64,35 +66,27 @@ object Pipeline {
     val cfg = config.getOrElse(PipelineConfig.default)
     val routed = PipelineConfig.transform(spark, turns, cfg).persist()
     try {
-      val counts = Aggregate.sinkCounts(routed)
       val rollup = Aggregate.convRollup(routed,
         salt = Aggregate.saltFor(convClustered, cfg.salt))
-      var n = 0L
       Commit.all(
         () => Route.writePartitioned(routed, s"$outDir/routed"),
-        () => counts.write.mode("overwrite").parquet(s"$outDir/sink_counts"),
         () => rollup.write.mode("overwrite").parquet(s"$outDir/conv_rollup"),
-        () => n = Obs.writeLineage(routed, batchId, "route", outDir))
-      obs.foreach { m =>
-        m.sent("route").add(n)
-        m.accepted("parse").add(n)
-      }
+        () => Obs.countRouted(routed, batchId, outDir, obs)(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/sink_counts")))
       PipelineResult(
-        readWritten(spark, routed, s"$outDir/routed", Route.PartitionCols),
-        readWritten(spark, counts, s"$outDir/sink_counts"),
-        readWritten(spark, rollup, s"$outDir/conv_rollup"))
+        readWritten(spark, routed.schema, s"$outDir/routed", Route.PartitionCols),
+        readWritten(spark, Obs.SinkCountsSchema, s"$outDir/sink_counts"),
+        readWritten(spark, rollup.schema, s"$outDir/conv_rollup"))
     } finally routed.unpersist()
   }
 
-  /** Open what was just written from `written` with the schema the write
-    * produced (partition columns last, as a partitioned read lays them
-    * out) instead of inferring it from file footers, a Spark job per
-    * directory.
+  /** Open what was just written with the schema `s` the write produced
+    * (partition columns last, as a partitioned read lays them out) instead
+    * of inferring it from file footers, a Spark job per directory.
     */
-  private def readWritten(spark: SparkSession, written: DataFrame, dir: String,
+  private def readWritten(spark: SparkSession, s: StructType, dir: String,
                           partitionCols: Seq[String] = Nil): DataFrame = {
-    val s = written.schema
-    val schema = org.apache.spark.sql.types.StructType(
+    val schema = StructType(
       s.filterNot(f => partitionCols.contains(f.name)) ++ partitionCols.map(s(_)))
     spark.read.schema(schema).parquet(dir)
   }

@@ -68,30 +68,25 @@ object StreamingPipeline {
   }
 
   /** One micro-batch's commit, shared by [[start]] and
-    * [[ServiceConfig.startStreamsShared]]:
-    * the routed rows, the per-sink counts and the lineage, written
-    * concurrently ([[Commit.all]]) from the batch persisted once.
+    * [[ServiceConfig.startStreamsShared]]: the routed rows and the one
+    * count ([[Obs.countRouted]]) that writes the lineage and the per-sink
+    * counts and fills `obs`, run concurrently ([[Commit.all]]) over the
+    * batch persisted once.
     * Idempotent: every output goes to a deterministic `batch_id=<id>`
     * directory with mode("overwrite"), so a replayed batch rewrites the
-    * same bytes. Kept apart from `Pipeline.runBatch`'s commit on purpose:
-    * the layouts differ (`batch_id=N` directories, a `batch_id` column on
-    * a one-file `sink_counts`, no `conv_rollup`).
+    * same bytes. Its layout differs from `Pipeline.runBatch`'s commit
+    * (`batch_id=N` directories, a `batch_id` column on a one-file
+    * `sink_counts`, no `conv_rollup`).
     */
   private[graft] def commitMicroBatch(batch: DataFrame, batchId: Long, outDir: String,
                                       obs: Option[ObsMetrics]): Unit = {
     val cached = batch.persist()
-    try {
-      var sent = 0L
-      Commit.all(
-        () => Route.writePartitioned(cached, s"$outDir/routed/batch_id=$batchId"),
-        () => Aggregate.sinkCounts(cached)
-          .withColumn("batch_id", lit(batchId))
-          .coalesce(1)
-          .write.mode("overwrite")
-          .parquet(s"$outDir/sink_counts/batch_id=$batchId"),
-        () => sent = Obs.writeLineage(cached, batchId, "route", outDir))
-      obs.foreach(_.sent("route").add(sent))
-    } finally { cached.unpersist() }
+    try Commit.all(
+      () => Route.writePartitioned(cached, s"$outDir/routed/batch_id=$batchId"),
+      () => Obs.countRouted(cached, batchId, outDir, obs)(
+        _.withColumn("batch_id", lit(batchId)).coalesce(1)
+          .write.mode("overwrite").parquet(s"$outDir/sink_counts/batch_id=$batchId")))
+    finally { cached.unpersist() }
   }
 
   /** Batch-mode count-flush analog (batchprocessor `send_batch_size`,

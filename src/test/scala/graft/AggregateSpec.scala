@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class AggregateSpec extends SparkTestBase {
@@ -9,7 +10,7 @@ class AggregateSpec extends SparkTestBase {
     val parsed = Parse.parseGrok(turns)
     val salted = Aggregate.convRollup(parsed, salt = 16)
       .withColumn("n_tools_distinct", col("n_tools_distinct").cast("long"))
-    val plain = Aggregate.convRollupUnsalted(parsed)
+    val plain = AggregateSpec.convRollupUnsalted(parsed)
       .withColumn("n_tools_distinct", col("n_tools_distinct").cast("long"))
     assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
   }
@@ -22,7 +23,7 @@ class AggregateSpec extends SparkTestBase {
     val rollup = Aggregate.convRollupFromPartials(partials)
       .withColumn("n_tools_distinct", col("n_tools_distinct").cast("long"))
     val countsDirect = Aggregate.sinkCounts(routed)
-    val rollupDirect = Aggregate.convRollupUnsalted(routed)
+    val rollupDirect = AggregateSpec.convRollupUnsalted(routed)
       .withColumn("n_tools_distinct", col("n_tools_distinct").cast("long"))
     assert(counts.exceptAll(countsDirect).isEmpty &&
       countsDirect.exceptAll(counts).isEmpty)
@@ -50,4 +51,20 @@ class AggregateSpec extends SparkTestBase {
     // two-phase: partial+final of stage1 (conv_id, _salt) then stage2 (conv_id)
     assert("HashAggregate".r.findAllIn(plan).size >= 4, plan)
   }
+}
+
+object AggregateSpec {
+
+  /** Unsalted single-phase rollup — the correctness oracle for the salted
+    * [[Aggregate.convRollup]] (results must be identical).
+    */
+  def convRollupUnsalted(parsed: DataFrame): DataFrame =
+    parsed.groupBy(col("conv_id")).agg(
+      count(lit(1)).as("n_turns"),
+      sum(when(col("err_code").isNotNull, 1L).otherwise(0L)).as("n_errors"),
+      count_distinct(Aggregate.countedTool(col("tool_invoked"))).cast("int")
+        .as("n_tools_distinct"),
+      min(col("ts")).as("first_ts"),
+      max(col("ts")).as("last_ts"),
+      sum(col("latency_ms")).as("sum_latency_ms"))
 }

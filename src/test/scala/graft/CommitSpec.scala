@@ -9,7 +9,11 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The concurrent commit ([[Commit.all]]) and how `Pipeline.runBatch` uses
   * it: schema-supplied read-backs, job properties on the commit threads,
@@ -25,6 +29,40 @@ class CommitSpec extends SparkTestBase {
       Turn("c1", 1, "assistant", "no tool token here", "", ts),
       Turn("c2", 0, "user", "tool=none status=E503 latency=9ms", "", ts))
       .toDS().toDF()
+  }
+
+  private def scansCache(p: SparkPlan): Boolean = p match {
+    case _: InMemoryTableScanExec => true
+    case a: AdaptiveSparkPlanExec => scansCache(a.executedPlan)
+    case q: QueryStageExec => scansCache(q.plan)
+    case o => o.children.exists(scansCache)
+  }
+
+  /** How many of the queries `f` runs scan a cached frame. */
+  private def cacheScans(f: => Unit): Int = {
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new QueryExecutionListener {
+      def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+        if (scansCache(qe.executedPlan)) n.incrementAndGet()
+      def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try f finally {
+      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark.sparkContext)
+      spark.listenerManager.unregister(l)
+    }
+    n.get
+  }
+
+  test("one count per commit: runBatch scans the routed cache 3 times, a micro-batch 2") {
+    val turns = TranscriptGen.turnsDs(spark, 60).toDF()
+    // the routed write, the rollup and the one (partition, sink) count
+    assert(cacheScans(Pipeline.runBatch(spark, turns, tmpDir("commit-scans"))) === 3)
+    // the routed write and the count; no rollup in the streaming layout
+    val batch = Pipeline.transform(turns, TranscriptGen.roleDim(spark).toDF(),
+      TranscriptGen.toolDim(spark).toDF())
+    assert(cacheScans(StreamingPipeline.commitMicroBatch(batch, 0L,
+      tmpDir("commit-scans-mb"), None)) === 2)
   }
 
   test("Commit.all attempts every write, waits for all, rethrows the first failure") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** obsreport taxonomy (SURVEY.md §2.12): accumulators, observe-tag harvest
-  * via QueryExecutionListener, and the per-partition lineage frame.
+  * via QueryExecutionListener, and the per-partition lineage table.
   */
 class ObsSpec extends SparkTestBase {
 
@@ -26,9 +26,12 @@ class ObsSpec extends SparkTestBase {
   test("lineage partition rows sum to frame size and cover all partitions") {
     val turns = TranscriptGen.turns(spark, 200, seed = 42).drop("_truth")
       .repartition(4)
-    val lin = Obs.lineage(turns, batchId = 7L, stage = "test")
-    val rows = lin.collect()
-    assert(rows.map(_.getAs[Long]("rows")).sum === turns.count())
+    val out = tmpDir("obs-lineage")
+    val n = Obs.writeLineage(turns, batchId = 7L, stage = "test", out)
+    val rows = spark.read.parquet(s"$out/_lineage/stage=test/batch_id=7").collect()
+    assert(n === turns.count())
+    assert(rows.map(_.getAs[Long]("rows")).sum === n)
+    assert(rows.length === 4)
     assert(rows.forall(_.getAs[Long]("batch_id") === 7L))
     assert(rows.map(_.getAs[Int]("partition_id")).distinct.length === rows.length)
   }

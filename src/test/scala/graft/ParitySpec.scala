@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** One topology, every path: a batch run, a stream and a shared-scan
   * service stream of the same [[PipelineConfig]] over the same files must
-  * route the same rows to the same sinks and count them the same, on a
+  * route the same rows to the same sinks and count them the same (lineage,
+  * `sink_counts` and the obs counters), on a
   * corpus with hostile rows (a grok miss, NULL, empty and non-ASCII text,
   * a tool outside `TranscriptGen.toolNames`).
   */
@@ -72,6 +73,11 @@ class ParitySpec extends SparkTestBase {
     assert(a._2 === b._2, name)
   }
 
+  /** Rows the lineage of the run under `out` counts, over all batches. */
+  private def lineageRows(out: String): Long =
+    spark.read.parquet(s"$out/_lineage/stage=route/batch_id=*")
+      .agg(sum("rows")).head().getLong(0)
+
   private def sinkOf(routed: DataFrame, conv: String, turn: Int): Seq[String] =
     routed.where(col("conv_id") === conv && col("turn_idx") === turn)
       .select(Route.SinkCol).collect().map(_.getString(0)).toSeq
@@ -80,16 +86,25 @@ class ParitySpec extends SparkTestBase {
     val (in, hostile) = hostileInput()
     val nIn = spark.read.parquet(in).count()
     val batchOut = tmpDir("parity-a-batch")
-    Pipeline.runBatch(spark, spark.read.parquet(in), batchOut)
+    val batchObs = new ObsMetrics(spark)
+    Pipeline.runBatch(spark, spark.read.parquet(in), batchOut, obs = Some(batchObs))
     val streamOut = tmpDir("parity-a-stream")
+    val streamObs = new ObsMetrics(spark)
     drain(StreamingPipeline.start(spark, in, streamOut, tmpDir("parity-a-ckpt"),
-      maxFilesPerTrigger = 1))
+      maxFilesPerTrigger = 1, obs = Some(streamObs)))
 
     val batch = committed(batchOut, streamed = false)
     val stream = committed(streamOut, streamed = true)
     assert(batch._1.count() === nIn)
     assert(batch._2.values.sum === nIn)
     assertSame("start", batch, stream)
+    // one count per commit: lineage, sink_counts and both counters agree
+    Seq("runBatch" -> (batchOut, batchObs), "start" -> (streamOut, streamObs)).foreach {
+      case (name, (out, obs)) =>
+        assert(lineageRows(out) === nIn, name)
+        assert(obs.snapshot.get("route/sent") === Some(nIn), name)
+        assert(obs.snapshot.get("parse/accepted") === Some(nIn), name)
+    }
     Seq(batch, stream).foreach { case (routed, _) =>
       assert(sinkOf(routed, hostile, 0) === Seq(Route.RestSink))
       assert(routed.where(col("conv_id") === hostile).count() === 6L)
@@ -111,6 +126,7 @@ class ParitySpec extends SparkTestBase {
     val nSampled = Sampler.sampleConversations(spark.read.parquet(in), sampled.samplePct).count()
     assert(nSampled < spark.read.parquet(in).count())
     assert(batch._1.count() === nSampled)
+    assert(batch._2.values.sum === nSampled)
     assert(batch._2.contains("tools") && !batch._2.contains("tool_search"))
     assertSame("start", batch, committed(streamOut, streamed = true))
     assertSame("startStreamsShared", batch, committed(s"$sharedOut/p", streamed = true))
@@ -119,6 +135,7 @@ class ParitySpec extends SparkTestBase {
         val routed = committed(out, streamed)._1
         assert(sinkOf(routed, hostile, 0) === Seq("tools"), out)
         assert(routed.where(col("conv_id") === hostile).count() === 6L, out)
+        assert(lineageRows(out) === nSampled, out)
     }
   }
 }

@@ -39,7 +39,7 @@ class TailSampleSpec extends SparkTestBase {
     // batch may need one extra trigger, so drop sentinels until all real
     // conversations have been decided
     import spark.implicits._
-    val expected = Aggregate.convRollupUnsalted(Parse.parseGrok(turns))
+    val expected = AggregateSpec.convRollupUnsalted(Parse.parseGrok(turns))
     val nExpected = expected.count()
     var attempt = 0
     def decided(): Long =

@@ -82,4 +82,32 @@ class MinKThresholdSpec extends SparkTestBase {
       assert(metrics.accepted("cap_empty").value === 0L)
     } finally spark.listenerManager.unregister(listener)
   }
+
+  /** Rows kept by a cap of `cap` over `df` and the observe tag's (rows, dropped). */
+  private def capped(df: org.apache.spark.sql.DataFrame, cap: Int,
+                     tag: String): (Long, Long, Long) = {
+    val metrics = new graft.ObsMetrics(spark)
+    val listener = new graft.ObsQueryListener(metrics)
+    spark.listenerManager.register(listener)
+    try {
+      val kept = graft.ops.DedupTestAccess.capBucketsBy(
+        df, Seq("bucket"), "id", cap, Some(s"graft_$tag")).count()
+      org.apache.spark.sql.GraftBridge.waitListenerBusEmpty(spark.sparkContext)
+      (kept, metrics.accepted(tag).value, metrics.dropped(tag).value)
+    } finally spark.listenerManager.unregister(listener)
+  }
+
+  test("ids tied at the threshold all survive and are not counted as dropped") {
+    // bucket 0: 3 × cap rows sharing one id; bucket 1: 2 × cap unique ids
+    val df = ((0 until 30).map(_ => (0L, 5L)) ++ (0 until 20).map(i => (1L, i.toLong)))
+      .toDF("bucket", "id").repartition(3)
+    assert(capped(df, 10, "cap_ties") === ((30L + 10L, 50L, 10L)))
+  }
+
+  test("a NULL bucket key is capped like any other; a NULL id there is dropped") {
+    val df = ((0 until 30).map(i => (Option.empty[Long], Option(i.toLong))) :+
+        ((Option.empty[Long], Option.empty[Long])))
+      .toDF("bucket", "id").repartition(3)
+    assert(capped(df, 10, "cap_null") === ((10L, 31L, 21L)))
+  }
 }

@@ -324,4 +324,27 @@ class IvfSpec extends SparkTestBase {
       k = 3, nProbe = 8).select("query_id").distinct().count()
     assert(got === 5L)
   }
+
+  test("appendToIndex: a replay restores a batch's missing drift row, once") {
+    val dir = java.nio.file.Files.createTempDirectory("ivf-drift-replay").toString
+    Ivf.writeIndex(vectors(240), "vec_id", "embedding", dir, nCells = 8, kmeansIters = 1)
+    val b1 = vectors(300).where(col("vec_id") >= 240)
+    val b2 = vectors(360).where(col("vec_id") >= 300)
+    assert(Ivf.appendToIndex(spark, dir, b1, "vec_id", "embedding", batchId = 1L))
+    assert(Ivf.appendToIndex(spark, dir, b2, "vec_id", "embedding", batchId = 2L))
+    def driftRows = Ivf.driftReport(spark, dir).orderBy("batch_id").collect().toSeq
+    val before = driftRows
+    // a crash between batch 1's cells append and its drift row
+    val kept = spark.read.parquet(s"$dir/drift").where(col("batch_id") =!= 1L)
+      .localCheckpoint(true)
+    kept.write.mode("overwrite").parquet(s"$dir/drift")
+    assert(driftRows.map(_.getAs[Long]("batch_id")) === Seq(2L))
+
+    // the replay is still a no-op for the cells but brings the row back
+    assert(!Ivf.appendToIndex(spark, dir, b1, "vec_id", "embedding", batchId = 1L))
+    assert(driftRows === before)
+    assert(!Ivf.appendToIndex(spark, dir, b1, "vec_id", "embedding", batchId = 1L))
+    assert(driftRows === before)
+    assert(spark.read.parquet(s"$dir/cells").count() === 360)
+  }
 }

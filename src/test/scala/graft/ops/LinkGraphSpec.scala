@@ -300,6 +300,17 @@ class LinkGraphSpec extends SparkTestBase {
       ("other.org", "docs", 1L)))
   }
 
+  test("anchorTerms: a protocol-relative href makes no edge") {
+    import spark.implicits._
+    val df = Seq((1L, "https://me.com/a",
+        "<a href=\"//other.example/x\">protocol relative</a>" +
+          "<a href=\"https://other.org/p\">kept</a>"))
+      .toDF("doc_id", "url", "html")
+    val got = LinkGraph.anchorTerms(df, "url", "html")
+      .as[(String, String, Long)].collect().toSet
+    assert(got == Set(("other.org", "kept", 1L)))
+  }
+
   test("rankDocs plan gate: the rank table never broadcasts") {
     // the rank table grows with the graph (10^8–10^9 domains at crawl
     // scale) — Catalyst would happily broadcast the toy-sized frame here,
